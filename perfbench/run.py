@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its result.
 
-    python3 perfbench/run.py --workload stream_steady --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload stream_steady --seed 1 --seconds 15 --trace 0
 
 Run from the root of a checkout. The first run builds the benchmark
-program (perfbench/build.sbt: the program's sources plus the code in
-perfbench/src) with sbt; later runs start the JVM directly. Every line
+program (perfbench/build.sbt: the code in perfbench/src on top of the
+program's own build) with sbt; later runs start the JVM directly. Every line
 but the last is for people; the last line is one JSON object:
 {"correct", "attempted", "failed", "metrics"}, where "metrics" holds the
 end-to-end metrics of BENCHMARK.json (--trace 0) or its per-layer
@@ -42,6 +42,7 @@ def log(msg):
 def sources():
     for d in (ROOT / "src" / "main", BENCH / "src"):
         yield from d.rglob("*.scala")
+    yield ROOT / "build.sbt"
     yield BENCH / "build.sbt"
 
 

@@ -69,7 +69,7 @@ object Main {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val workload = a("workload")
     val out = new File(a("out"))
-    val cores = a.get("cores").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+    val cores = Runtime.getRuntime.availableProcessors
     val jvmStart = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
     val traced = a.getOrElse("trace", "0") == "1"
     val trace = new Trace(traced)
@@ -84,8 +84,6 @@ object Main {
       case "batch_suite" => Suite.run(ctx)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
-    res.layers("engine.cache_mb") = (cacheMb(ctx.spark), "MB")
-    res.metrics("cache_mb") = res.layers("engine.cache_mb")
     if (traced && workload == "ingest_bulk") {
       // scaling baseline: the same closed loop on one core
       ctx.spark.stop()
@@ -110,10 +108,15 @@ object Main {
     ctx.spark.stop()
   }
 
-  /** Block-manager storage memory in use across the driver's stores. */
-  def cacheMb(spark: SparkSession): Double =
-    spark.sparkContext.getExecutorMemoryStatus.values
+  /** Block-manager storage memory the program holds once a workload's
+    * measured part is over, before the benchmark's own checks cache
+    * anything. */
+  def recordCache(res: Result, spark: SparkSession): Unit = {
+    val mb = spark.sparkContext.getExecutorMemoryStatus.values
       .map { case (max, free) => (max - free).toDouble }.sum / (1 << 20)
+    res.layers("engine.cache_mb") = (mb, "MB")
+    res.metrics("cache_mb") = (mb, "MB")
+  }
 
   private def metricMap(m: mutable.LinkedHashMap[String, (Double, String)]) = {
     val j = new java.util.LinkedHashMap[String, Any]()

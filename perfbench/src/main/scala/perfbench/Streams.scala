@@ -2,7 +2,7 @@ package perfbench
 
 import java.io.File
 import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.locks.LockSupport
+import java.util.concurrent.locks.{LockSupport, ReentrantReadWriteLock}
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -35,8 +35,17 @@ object Streams {
   private val ServedCols = Seq("window_start", "window_end", "event_type", "event_count",
     "unique_user_count", "total_value", "avg_value")
 
-  /** One running pipeline over a MemoryStream of wire records. */
-  final class Pipe(ctx: Ctx, val served: String) {
+  /** One running pipeline over a MemoryStream of wire records, flushed
+    * to the sink every `cadence` ("0 seconds": back to back). */
+  final class Pipe(ctx: Ctx, val served: String, cadence: String) {
+    /** `upsertBatch` renames the served directory aside and a new one into
+      * place, and a read that lists or scans it meanwhile throws
+      * `FileNotFoundException`. How many reads hit that window is a matter
+      * of timing, so a run's failure count would differ from run to run
+      * on the same input. Reads therefore hold this lock's read side and
+      * the sink its write side: a read waits for a running sink call and
+      * the sink for a running read, and the wait counts in their times. */
+    val servedLock = new ReentrantReadWriteLock(true)
     private val spark = ctx.spark
     // one partition per core, as a topic with that many partitions would
     // give, however many appends a micro-batch covers
@@ -45,29 +54,53 @@ object Streams {
     val sinkMs = new ConcurrentLinkedQueue[java.lang.Double]()
     private val agg = StreamingAgg.dedupedHourlyAggStream(spark,
       Sources.parseJsonEvents(mem.toDF()))
-    val query = StreamingAgg.startWithFlushCadence(agg, "0 seconds") { (batch, id) =>
+    // an offset for the first trigger (planning, codegen and state-store
+    // start-up), which runs at once whatever the cadence
+    val firstOffset: Long = mem.addData(Seq.empty[String]).json().toLong
+    val query = StreamingAgg.startWithFlushCadence(agg, cadence) { (batch, id) =>
+      val w0 = System.nanoTime()
+      servedLock.writeLock().lock()
       val t0 = System.nanoTime()
-      StreamingAgg.upsertBatch(spark, batch, served, id)
+      try StreamingAgg.upsertBatch(spark, batch, served, id)
+      finally servedLock.writeLock().unlock()
       val t1 = System.nanoTime()
+      if (t0 - w0 > 1000000L) ctx.trace.span(s"b$id", "sink", "wait_for_read", w0, t0)
       visibleNs.put(id, t1)
       sinkMs.add((t1 - t0) / 1e6)
       ctx.trace.span(s"b$id", "sink", "upsertBatch", t0, t1)
     }
 
-    /** Appends records; returns the MemoryStream offset they end at. */
+    /** Appends one tick of records (a MemoryStream offset counts appends,
+      * not records); returns the offset they end at. */
     def append(recs: Array[String]): Long = mem.addData(recs.toSeq).json().toLong
 
     def progress: Seq[StreamingQueryProgress] = query.recentProgress.toSeq
 
+    /** Waits until a batch covering `offset` has committed. Unlike
+      * `processAllAvailable`, this does not wait for a further trigger
+      * that finds no new data, a whole cadence later. */
+    def awaitCommitted(offset: Long): Unit =
+      while (Option(query.lastProgress).flatMap(endOffset).forall(_ < offset)) {
+        query.exception.foreach(e => throw e)
+        Thread.sleep(2)
+      }
+
     /** Visible time of the first batch whose end offset covers `offset`. */
     def visibleAt(offset: Long): Option[Long] =
-      batchEnds.collectFirst { case (b, end) if end >= offset => b }
-        .flatMap(b => Option(visibleNs.get(b)))
+      batchEnds.find(_._2 >= offset).flatMap { case (b, _) => Option(visibleNs.get(b)) }
 
-    private lazy val batchEnds: Seq[(Long, Long)] = progress
-      .filter(p => p.sources.nonEmpty && p.sources.head.endOffset != null)
-      .map(p => p.batchId -> p.sources.head.endOffset.trim.toLong)
-      .sortBy(_._1)
+    /** How many batches hold the appends in offsets [from, to]. */
+    def batchesCovering(from: Long, to: Long): Int = {
+      val i = batchEnds.indexWhere(_._2 >= from)
+      val j = batchEnds.indexWhere(_._2 >= to)
+      if (i < 0 || j < 0) 0 else j - i + 1
+    }
+
+    private def endOffset(p: StreamingQueryProgress): Option[Long] =
+      p.sources.headOption.flatMap(s => Option(s.endOffset)).map(_.trim.toLong)
+
+    private lazy val batchEnds: Seq[(Long, Long)] =
+      progress.flatMap(p => endOffset(p).map(p.batchId -> _)).sortBy(_._1)
 
     def corruptRecords: Long = progress.flatMap(p => Option(p.observedMetrics.get("json_parse")))
       .map(_.getAs[Long]("corrupt_records")).sum
@@ -104,14 +137,18 @@ object Streams {
   private def rootCause(e: Throwable): Throwable =
     if (e.getCause == null || e.getCause == e) e else rootCause(e.getCause)
 
-  /** Issues one read; returns the nanoTime at its start and at the ends
-    * of build, plan and exec, or the class of what it threw. */
-  private def read(ctx: Ctx, served: String, r: Int): Either[String, (Long, Long, Long, Long)] = {
+  /** Issues one read once no sink call is running; returns the nanoTime
+    * at its start and at the ends of build, plan and exec, or the class of
+    * what it threw. */
+  private def read(ctx: Ctx, pipe: Pipe, r: Int): Either[String, (Long, Long, Long, Long)] = {
     val (_, q) = Reads(r % Reads.size)
     ctx.spark.sparkContext.setLocalProperty(EngineListener.SpanKey, s"r$r")
+    val w0 = System.nanoTime()
+    pipe.servedLock.readLock().lock()
     val t0 = System.nanoTime()
+    if (t0 - w0 > 1000000L) ctx.trace.span(s"r$r", "queries", "wait_for_sink", w0, t0)
     try {
-      val df = q(ctx.spark.read.parquet(served))
+      val df = q(ctx.spark.read.parquet(pipe.served))
       val t1 = System.nanoTime()
       df.queryExecution.executedPlan
       val t2 = System.nanoTime()
@@ -127,7 +164,10 @@ object Streams {
         val cls = if (c eq e) e.getClass.getName else s"${e.getClass.getName}<-${c.getClass.getName}"
         ctx.trace.span(s"r$r", "queries", "failed", t0, System.nanoTime(), "exception" -> cls)
         Left(cls)
-    } finally ctx.spark.sparkContext.setLocalProperty(EngineListener.SpanKey, null)
+    } finally {
+      pipe.servedLock.readLock().unlock()
+      ctx.spark.sparkContext.setLocalProperty(EngineListener.SpanKey, null)
+    }
   }
 
   /** Latencies and per-query times of a set of reads. */
@@ -137,11 +177,12 @@ object Streams {
     val planMs = new ConcurrentLinkedQueue[java.lang.Double]()
     val execMs = new ConcurrentLinkedQueue[java.lang.Double]()
     val failures = new ConcurrentLinkedQueue[String]()
-    @volatile var attempted = 0
+    private val issued = new java.util.concurrent.atomic.AtomicInteger
+    def attempted: Int = issued.get
 
-    def issue(ctx: Ctx, served: String, r: Int, dueNs: Long): Unit = {
-      attempted += 1
-      read(ctx, served, r) match {
+    def issue(ctx: Ctx, pipe: Pipe, r: Int, dueNs: Long): Unit = {
+      issued.incrementAndGet()
+      read(ctx, pipe, r) match {
         case Right((t0, t1, t2, t3)) =>
           latMs.add((t3 - dueNs) / 1e6)
           byQuery.computeIfAbsent(Reads(r % Reads.size)._1, _ => new ConcurrentLinkedQueue())
@@ -246,15 +287,18 @@ object Streams {
       (ops.flatten.map(_.numRowsDroppedByWatermark).sum.toDouble, "count")
   }
 
-  private def readLayers(res: Result, log: ReadLog, engine: EngineListener): Unit = {
+  /** Times of the measured reads `log`; job and failure counts of `all`. */
+  private def readLayers(res: Result, log: ReadLog, all: Seq[ReadLog],
+      engine: EngineListener): Unit = {
     for ((name, _) <- Reads)
       res.layers(s"queries.${name}_ms_p50") =
         (Option(log.byQuery.get(name)).map(q => Stats.pct(ds(q), 50)).getOrElse(Double.NaN), "ms")
     res.layers("queries.plan_ms_p50") = (Stats.pct(ds(log.planMs), 50), "ms")
     res.layers("queries.exec_ms_p50") = (Stats.pct(ds(log.execMs), 50), "ms")
     val readJobs = engine.jobsBySpan.asScala.collect { case (k, v) if k.startsWith("r") => v.get }.sum
-    res.layers("queries.jobs_per_read") = (readJobs.toDouble / math.max(1, log.attempted), "count")
-    res.layers("queries.read_failures") = (log.failures.size.toDouble, "count")
+    res.layers("queries.jobs_per_read") =
+      (readJobs.toDouble / math.max(1, all.map(_.attempted).sum), "count")
+    res.layers("queries.read_failures") = (all.map(_.failures.size).sum.toDouble, "count")
   }
 
   /** Engine counters over a measured window of `wallS` seconds. */
@@ -271,32 +315,20 @@ object Streams {
     res.layers("engine.gc_s") = (e.gcMs.get / 1000.0, "s")
   }
 
-  /** Median over `reps` set-ups of the part of set-up a run can repeat;
-    * every repetition but the last is torn down again. */
-  def repeatedSetup[T](reps: Int)(up: () => T)(down: T => Unit): (T, Double) = {
-    val times = mutable.ArrayBuffer[Double]()
-    var last: Option[T] = None
-    for (k <- 1 to reps) {
-      val t0 = System.nanoTime()
-      val v = up()
-      times += (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[perfbench] set-up $k took ${times.last}%.2f s")
-      if (k < reps) down(v) else last = Some(v)
-    }
-    (last.get, Stats.median(times))
-  }
+  /** The sink's flush cadence on stream_steady, about twice what one
+    * trigger takes: the number of flushes in a run is then fixed, and the
+    * CPU per record follows what one flush costs. */
+  val CadenceMs = 5000L
 
-  val SetupReps = 3
-
-  /** stream_steady: open-loop ingest at 1,000 ev/s in 10 ms ticks with an
-    * open-loop reader issuing Q1–Q5 at 1 read/s beside it. */
+  /** stream_steady: open-loop ingest at 1,000 ev/s in 10 ms ticks, flushed
+    * every `CadenceMs`, with an open-loop reader issuing Q1–Q5 at 1 read/s
+    * beside it. */
   def steady(ctx: Ctx): Result = {
     val res = new Result
     val spark = ctx.spark
     val rate = 1000
     val tickMs = 10
     val perTick = rate * tickMs / 1000
-    val warmupS = 3.0
     // one simulated hour per six wall seconds, so windows close and the
     // watermark evicts state within a run
     val gen = Gen(ctx.seed, users = 500, startMicros = Gen.LiveStart,
@@ -307,13 +339,9 @@ object Streams {
     val sessionS = ctx.sinceStart
     history(spark, ctx.seed).coalesce(1).write.mode("overwrite").parquet(served)
     val seededS = ctx.sinceStart - sessionS
-    val (pipe, prepS) = repeatedSetup(SetupReps) { () =>
-      val p = new Pipe(ctx, served)
-      // first trigger: planning, codegen and state-store start-up
-      p.append(Array.empty[String])
-      p.query.processAllAvailable()
-      p
-    } { p => p.query.stop() }
+    val pipe = new Pipe(ctx, served, s"$CadenceMs milliseconds")
+    pipe.awaitCommitted(pipe.firstOffset)
+    val prepS = ctx.sinceStart - sessionS - seededS
     if (ctx.traced) spark.streams.addListener(progress)
     ctx.startEngine()
 
@@ -321,11 +349,25 @@ object Streams {
     // are built before the due time and appended at it
     final case class Tick(k: Long, dueNs: Long, appendNs: Long, offset: Long)
     val ticks = new ConcurrentLinkedQueue[Tick]()
-    val startNs = System.nanoTime()
-    val measureFrom = startNs + (warmupS * 1e9).toLong
+    val setupS = ctx.sinceStart
+    val gauge = new HostGauge
+    // Flushes fire on multiples of the cadence in wall-clock time. Traffic
+    // starts on one, and the measured window one flush of warm-up later,
+    // so each flush covers the same events on every run and the measured
+    // ticks are flushed by exactly seconds ÷ cadence flushes of their own.
+    // Both start 50 ms before a flush, so that a late last tick still
+    // makes its flush.
+    val nowMs = System.currentTimeMillis()
+    val startMs = (nowMs + 50 + CadenceMs - 1) / CadenceMs * CadenceMs - 50
+    val startNs = System.nanoTime() + (startMs - nowMs) * 1000000L
+    val measureFrom = startNs + CadenceMs * 1000000L
     val measureTo = measureFrom + ctx.seconds * 1000000000L
     var dups = 0L
-    val cpu = new CpuMeter
+    // the generator and the read pool stay alive until the CPU of the
+    // whole traffic has been read, so that it includes all of their time
+    val appended = new java.util.concurrent.CountDownLatch(1)
+    val readsDone = new java.util.concurrent.CountDownLatch(1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
     val genThread = new Thread(() => {
       var k = 0L
       var due = startNs
@@ -340,36 +382,58 @@ object Streams {
         k += 1
         due = startNs + k * tickMs * 1000000L
       }
-      cpu.exiting()
+      appended.countDown()
+      drained.await()
     }, "perfbench-gen")
+    // reads start with the traffic, so each query has run before the
+    // measured window, and end with it, so every run issues the same
+    // number. Reads in the warm-up count as attempted, not in latencies.
+    // Each read is issued at its due time on a small pool, whatever the
+    // reads before it are doing: reads held up by a sink call then run
+    // side by side once it ends, instead of queueing one behind another.
+    val warmReads = new ReadLog
     val reads = new ReadLog
-    // reads go on while the stream drains: writes are still landing
-    @volatile var draining = true
+    val readPool = java.util.concurrent.Executors.newFixedThreadPool(3)
     val readThread = new Thread(() => {
+      val issued = mutable.ArrayBuffer[java.util.concurrent.Future[_]]()
       var r = 0
-      var due = measureFrom
-      while (due < measureTo || draining) {
+      var due = startNs
+      while (due < measureTo) {
         parkUntil(due)
-        reads.issue(ctx, served, r, due)
+        val (log, k, d) = (if (due < measureFrom) warmReads else reads, r, due)
+        issued += readPool.submit((() => log.issue(ctx, pipe, k, d)): Runnable)
         r += 1
-        due = measureFrom + r * 1000000000L
+        due = startNs + r * 1000000000L
       }
-      cpu.exiting()
+      issued.foreach(_.get())
+      readsDone.countDown()
     }, "perfbench-reader")
+    // CPU is read over all the traffic: every tick, every read and every
+    // flush up to the one that makes the last tick visible. That work is
+    // the same on every run; a window that starts or ends mid-traffic
+    // would hold more or fewer reads as their queue behind the sink varies.
+    val cpu0 = CpuMeter.snapshot()
     genThread.start()
+    readThread.start()
     parkUntil(measureFrom)
     ctx.note("measuring")
-    cpu.begin()
-    val setupS = sessionS + seededS + prepS + warmupS
-    readThread.start()
-    genThread.join()
-    pipe.query.processAllAvailable()
-    draining = false
+    val (cpu1, cpuEndNs) = try {
+      appended.await()
+      pipe.awaitCommitted(ticks.asScala.map(_.offset).max)
+      readsDone.await()
+      (CpuMeter.snapshot(), System.nanoTime())
+    } finally {
+      drained.countDown()
+      readPool.shutdown()
+    }
     readThread.join()
+    genThread.join()
+    readPool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
     val endNs = System.nanoTime()
-    val cpuUsed = cpu.seconds
+    gauge.stop()
     pipe.query.stop()
     if (ctx.traced) spark.streams.removeListener(progress)
+    Main.recordCache(res, spark)
     ctx.note("drained")
     if (ctx.traced) {
       ctx.settle()
@@ -390,10 +454,14 @@ object Streams {
       .count(i => !gen.malformed(i))).sum
     val lastVisible = measured.lastOption.flatMap(t => pipe.visibleAt(t.offset)).getOrElse(endNs)
     val eps = measuredEvents / ((lastVisible - measured.head.dueNs) / 1e9)
+    // CPU per 1,000 wire records over all the traffic, at the gauge's
+    // reference speed
+    val cpuS = gauge.normalize(CpuMeter.between(cpu0, cpu1), startNs, cpuEndNs)
+    val records = n
 
-    res.attempted = distinct + reads.attempted
-    res.failed = missing + reads.failures.size
-    res.failures ++= reads.failures.asScala
+    res.attempted = distinct + warmReads.attempted + reads.attempted
+    res.failed = missing + warmReads.failures.size + reads.failures.size
+    res.failures ++= warmReads.failures.asScala ++ reads.failures.asScala
     if (missing > 0) res.failures += "EventNotVisible"
 
     res.metrics("setup_s") = (setupS, "s")
@@ -402,12 +470,15 @@ object Streams {
     res.metrics("read_latency_p50_ms") = (Stats.pct(reads.lat, 50), "ms")
     res.metrics("read_latency_p99_ms") = (Stats.pct(reads.lat, 99), "ms")
     res.metrics("events_per_s") = (eps, "ev/s")
-    res.metrics("cpu_ms_per_1k_events") = (cpuUsed * 1e6 / measuredEvents, "ms")
+    res.metrics("cpu_ms_per_1k_events") = (cpuS * 1e6 / records, "ms")
     res.metrics("failed_ratio") = (res.failed.toDouble / res.attempted, "ratio")
 
     res.slots("setup_s") = (setupS, "s")
     res.slots("cpu_ms_per_unit") = res.metrics("cpu_ms_per_1k_events")
 
+    res.layers("streaming.flushes") =
+      (pipe.batchesCovering(all.head.offset, all.last.offset).toDouble, "count")
+    res.layers("host.gauge_ms") = (gauge.medianMs(startNs, cpuEndNs), "ms")
     res.layers("gen.events") = (n.toDouble, "count")
     res.layers("gen.duplicates") = (dups.toDouble, "count")
     res.layers("gen.malformed") = ((0L until n).count(i => gen.malformed(i)).toDouble, "count")
@@ -419,7 +490,7 @@ object Streams {
     res.layers("setup.prepare_s") = (seededS + prepS, "s")
     if (ctx.traced) {
       streamingLayers(ctx, res, progress.progress.asScala.toSeq)
-      readLayers(res, reads, ctx.engine)
+      readLayers(res, reads, Seq(warmReads, reads), ctx.engine)
       val batches = ctx.engine.jobsBySpan.asScala.count(_._1.startsWith("b"))
       val batchJobs = ctx.engine.jobsBySpan.asScala.collect { case (k, v) if k.startsWith("b") => v.get }.sum
       res.layers("streaming.jobs_per_trigger") = (batchJobs.toDouble / math.max(1, batches), "count")
@@ -455,20 +526,16 @@ object Streams {
     producer.setDaemon(true)
 
     val sessionS = ctx.sinceStart
-    val (pipe, prepS) = repeatedSetup(SetupReps) { () =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new File(served))
-      val p = new Pipe(ctx, served)
-      p.append(Array.empty[String])
-      p.query.processAllAvailable()
-      p
-    } { p => p.query.stop() }
+    val pipe = new Pipe(ctx, served, "0 seconds")
+    pipe.query.processAllAvailable()
+    val setupS = ctx.sinceStart
+    val prepS = setupS - sessionS
+    val gauge = new HostGauge
     producer.start()
     // warm-up chunk: untimed, but its events count for correctness
-    val w0 = System.nanoTime()
     val first = ready.take()
     pipe.append(first.recs)
     pipe.query.processAllAvailable()
-    val setupS = sessionS + prepS + (System.nanoTime() - w0) / 1e9
     if (ctx.traced) spark.streams.addListener(progress)
     ctx.startEngine()
 
@@ -495,14 +562,16 @@ object Streams {
     producer.interrupt()
     producer.join()
     val wallS = (lastCommit - startNs) / 1e9
-    val cpuUsed = cpu.seconds
+    val cpuUsed = gauge.normalize(cpu.seconds, startNs, lastCommit)
+    gauge.stop()
     if (ctx.traced) spark.streams.removeListener(progress)
 
     // reads against the bulk-built table once ingest is over
     val reads = new ReadLog
-    for (r <- 0 until 2 * Reads.size) reads.issue(ctx, served, r, System.nanoTime())
+    for (r <- 0 until 2 * Reads.size) reads.issue(ctx, pipe, r, System.nanoTime())
     val endNs = System.nanoTime()
     pipe.query.stop()
+    Main.recordCache(res, spark)
     if (ctx.traced) {
       ctx.settle()
       engineLayers(res, ctx.engine, (endNs - startNs) / 1e9, ctx.cores)
@@ -537,9 +606,10 @@ object Streams {
     res.layers("sink.upsert_ms_p99") = (Stats.pct(ds(pipe.sinkMs), 99), "ms")
     res.layers("setup.session_s") = (sessionS, "s")
     res.layers("setup.prepare_s") = (prepS, "s")
+    res.layers("host.gauge_ms") = (gauge.medianMs(startNs, lastCommit), "ms")
     if (ctx.traced) {
       streamingLayers(ctx, res, progress.progress.asScala.toSeq)
-      readLayers(res, reads, ctx.engine)
+      readLayers(res, reads, Seq(reads), ctx.engine)
     }
     res
   }

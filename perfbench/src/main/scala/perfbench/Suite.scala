@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
 /** batch_suite: registry queries over the committed harness tables, each
   * forced as graft.Bench forces it (`queryExecution.toRdd.count()`), one
   * cold pass in the fresh session and then warm passes until the run's
-  * seconds are used up. */
+  * seconds, counted from the start of the cold pass, are used up (at
+  * least one). */
 object Suite {
   /** One query or more per family: the reference path (its Q1 and Q5
     * reads), the star schema, consumers of the session plan cache
@@ -69,8 +70,9 @@ object Suite {
     val res = new Result
     val spark = ctx.spark
     val sessionS = ctx.sinceStart
-    val (_, prepS) = Streams.repeatedSetup(Streams.SetupReps)(() => warmup(spark, ctx.data))(_ => ())
-    val setupS = sessionS + prepS
+    warmup(spark, ctx.data)
+    val setupS = ctx.sinceStart
+    val prepS = setupS - sessionS
     ctx.startEngine()
 
     val failures = mutable.ArrayBuffer[String]()
@@ -82,6 +84,7 @@ object Suite {
         case Left(cls) => failures += cls; None
       }
     }
+    val gauge = new HostGauge
     ctx.note("measuring")
     val startNs = System.nanoTime()
     val cpu = new CpuMeter
@@ -89,18 +92,21 @@ object Suite {
     val cold = pass("cold")
     val cpuCold = cpu.seconds
     ctx.note("cold pass done")
-    val warmFrom = System.nanoTime()
     val warm = mutable.ArrayBuffer[Seq[Run]]()
     // warm passes while another one still ends inside the run's seconds
+    // (the cold pass alone may use them all up)
     var passNs = 0L
-    while (warm.isEmpty || System.nanoTime() - warmFrom + passNs <= ctx.seconds * 1000000000L) {
+    while (warm.isEmpty || System.nanoTime() - startNs + passNs <= ctx.seconds * 1000000000L) {
       val p0 = System.nanoTime()
       warm += pass(s"warm${warm.size}")
       passNs = System.nanoTime() - p0
     }
-    val wallS = (System.nanoTime() - startNs) / 1e9
+    val endNs = System.nanoTime()
+    val wallS = (endNs - startNs) / 1e9
     val cpuWarm = (cpu.seconds - cpuCold) / warm.size
+    gauge.stop()
     ctx.note(s"${warm.size} warm passes done")
+    Main.recordCache(res, spark)
     if (ctx.traced) { ctx.settle(); Streams.engineLayers(res, ctx.engine, wallS, ctx.cores) }
 
     // correctness, outside the timed window: each result beside its oracle
@@ -141,7 +147,8 @@ object Suite {
       warm.flatten.filter(r => ReadQueries(r.name)).map(_.wallS * 1000), 50), "ms")
     res.metrics("cpu_s_cold") = (cpuCold, "s")
     res.metrics("cpu_s_warm") = (cpuWarm, "s")
-    res.metrics("cpu_ms_per_query") = ((cpuCold + cpuWarm) * 1000 / names.size, "ms")
+    res.metrics("cpu_ms_per_query") =
+      (gauge.normalize(cpuCold + cpuWarm, startNs, endNs) * 1000 / names.size, "ms")
     res.metrics("queries_per_s") = (names.size / warmTotal, "1/s")
 
     res.slots("setup_s") = (setupS, "s")
@@ -157,6 +164,7 @@ object Suite {
     res.layers("batch.cold_build_s") = (total(cold, _.buildS), "s")
     res.layers("batch.cold_act_s") = (total(cold, _.actS), "s")
     res.layers("batch.warm_passes") = (warm.size.toDouble, "count")
+    res.layers("host.gauge_ms") = (gauge.medianMs(startNs, endNs), "ms")
     res.layers("setup.session_s") = (sessionS, "s")
     res.layers("setup.prepare_s") = (prepS, "s")
     res

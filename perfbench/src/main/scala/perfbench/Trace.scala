@@ -126,15 +126,14 @@ object Stats {
 /** CPU time of the program's Java threads (Spark tasks, the stream and
   * driver threads, the benchmark's own), without the JVM's JIT and GC
   * threads, which ThreadMXBean does not list: a measure of work done
-  * that does not stretch when the host steals time from the VM. A thread
-  * the benchmark starts adds its own time with `exiting` before it ends. */
+  * that does not stretch while threads wait, though it drifts with the
+  * host's speed (see `HostGauge`). A thread
+  * the benchmark starts adds its own time with `exiting` before it ends.
+  * Without `exiting`, compare two snapshots taken while that thread lives. */
 final class CpuMeter {
-  private val mx = java.lang.management.ManagementFactory.getThreadMXBean
+  import CpuMeter._
   private val exited = new AtomicLong
   @volatile private var start = Map.empty[Long, Long]
-
-  private def snapshot(): Map[Long, Long] =
-    mx.getAllThreadIds.map(id => id -> mx.getThreadCpuTime(id)).filter(_._2 >= 0).toMap
 
   def begin(): Unit = { start = snapshot(); exited.set(0) }
 
@@ -145,6 +144,82 @@ final class CpuMeter {
   }
 
   /** CPU seconds since `begin`. */
-  def seconds: Double =
-    (snapshot().map { case (id, t) => t - start.getOrElse(id, 0L) }.sum + exited.get) / 1e9
+  def seconds: Double = between(start, snapshot()) + exited.get / 1e9
+}
+
+object CpuMeter {
+  private val mx = java.lang.management.ManagementFactory.getThreadMXBean
+  private val excluded = ConcurrentHashMap.newKeySet[Long]()
+
+  /** Leaves a thread of the benchmark's own out of every snapshot. */
+  def exclude(id: Long): Unit = excluded.add(id)
+
+  /** CPU nanoseconds of every live thread, by thread id. */
+  def snapshot(): Map[Long, Long] =
+    mx.getAllThreadIds.filterNot(id => excluded.contains(id))
+      .map(id => id -> mx.getThreadCpuTime(id)).filter(_._2 >= 0).toMap
+
+  /** CPU seconds spent between two snapshots by the threads alive at the
+    * second; a thread that ended in between drops out. */
+  def between(from: Map[Long, Long], to: Map[Long, Long]): Double =
+    to.map { case (id, t) => t - from.getOrElse(id, 0L) }.sum / 1e9
+}
+
+/** How fast the host runs a fixed piece of work right now. On a shared
+  * virtual machine the CPU time that the same work takes drifts by a
+  * fifth and more from one minute to the next (the generator's constant
+  * work per flush interval takes from 0.08 to 0.15 CPU seconds). This
+  * thread times a fixed, allocation-free kernel (xorshift steps over a
+  * cache-resident and a 32 MB table) in thread CPU time every 50 ms while
+  * a workload runs; CPU measures divided by its median over the same span
+  * and multiplied by `RefMs` are on a common footing across runs. It uses
+  * about 3% of one core and is left out of every `CpuMeter` snapshot. */
+final class HostGauge {
+  import HostGauge._
+  private val samples = new ConcurrentLinkedQueue[(Long, Double)]()
+  @volatile private var running = true
+  private val thread = new Thread(() => {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    var k = 0
+    var sink = 0
+    while (k < 200) { sink += kernel(k); k += 1 } // compiled before sampling
+    while (running) {
+      val c0 = mx.getCurrentThreadCpuTime
+      sink += kernel(k)
+      samples.add((System.nanoTime(), (mx.getCurrentThreadCpuTime - c0) / 1e6))
+      k += 1
+      Thread.sleep(50)
+    }
+    if (sink == 42) System.err.println("") // keeps the kernel from being elided
+  }, "perfbench-gauge")
+  thread.setDaemon(true)
+  thread.start()
+  CpuMeter.exclude(thread.getId)
+
+  /** Median kernel CPU milliseconds of the samples taken in [fromNs, toNs). */
+  def medianMs(fromNs: Long, toNs: Long): Double =
+    Stats.median(samples.asScala.collect { case (t, ms) if t >= fromNs && t < toNs => ms })
+
+  /** Scales CPU `x` measured over [fromNs, toNs) to the reference speed. */
+  def normalize(x: Double, fromNs: Long, toNs: Long): Double = x * RefMs / medianMs(fromNs, toNs)
+
+  def stop(): Unit = { running = false; thread.join() }
+}
+
+object HostGauge {
+  /** The kernel's usual CPU time on the 4-core host the bounds were set on. */
+  val RefMs = 1.5
+
+  private val big = Array.tabulate(1 << 23)(_ * 31)
+  private val small = Array.tabulate(1 << 16)(_ * 17)
+
+  private def kernel(seed: Int): Int = {
+    var x = seed | 1
+    var acc = 0
+    var i = 0
+    while (i < 300000) { x ^= x << 13; x ^= x >>> 17; x ^= x << 5; acc += small(x & 0xFFFF); i += 1 }
+    i = 0
+    while (i < 30000) { x ^= x << 13; x ^= x >>> 17; x ^= x << 5; acc += big(x & 0x7FFFFF); i += 1 }
+    acc
+  }
 }

@@ -17,22 +17,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** The live persisted fingerprint frames of the session's most recent
-    * near-dup/funnel call (the [[graft.operators.Curation]] lifecycle
-    * pattern, widened to a SET because [[incrementalCrossmodal]] holds two
-    * frames at once): a new call releases the previous call's frames, and
-    * [[release]] lets callers drop them eagerly. Bounded by construction —
-    * at most one entry (≤2 frames) per SparkSession.
-    */
-  private val liveCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, List[DataFrame]]()
-
-  /** Unpersist the session's live fingerprint frames, if any. */
-  def release(spark: SparkSession): Unit = {
-    val prev = liveCache.remove(spark)
-    if (prev != null) prev.foreach(_.unpersist(blocking = false))
-  }
-
   /** Persist codec-derived fingerprint frames for the duration of one
     * operator call, EAGERLY (a materializing count), so the real decodes
     * (javax.imageio / javax.sound, the dominant cost of every near-dup
@@ -48,12 +32,14 @@ object Multimodal {
     * because the consumers are independent shuffle-map stages of ONE job:
     * submitted concurrently, each would race to compute the same cache
     * partition and the decode could still run per-branch.
+    *
+    * The frames stay pinned in the [[graft.operators.PlanCache]] registry
+    * until the next call (a SET because [[incrementalCrossmodal]] holds
+    * two frames at once) — at most two frames per SparkSession.
     */
   private def persistFingerprints(dfs: DataFrame*): Seq[DataFrame] = {
-    release(dfs.head.sparkSession)
-    val cached = dfs.map(_.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    liveCache.put(dfs.head.sparkSession, cached.toList)
+    val cached = graft.operators.PlanCache.replacePins(dfs.head.sparkSession, this)(
+      dfs.map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
     cached.foreach(_.count())
     cached
   }
@@ -649,55 +635,28 @@ object Multimodal {
     crossmodalFlags(documents, maxHamming)
       .filter(col("f5")).select(col("doc_id"))
 
+  /** Session-scoped cache of the CHECKPOINTED crossmodal fingerprint
+    * frame: the funnel, the survivor projection and the train manifest
+    * all decode the same corpus through the same three codecs — decode
+    * once per corpus per session ([[graft.operators.PlanCache]]
+    * discipline; 44 bytes/doc). Streaming/in-memory frames bypass (the
+    * streaming path feeds the standing digest index instead).
+    */
+  private val crossmodalFpCache = new graft.operators.PlanCache[Unit]()
+
+  private def crossmodalFpCached(documents: DataFrame): DataFrame =
+    crossmodalFpCache.getOrBuild(documents, ())(crossmodalFingerprints(documents))
+
   /** The funnel's flagged frame: one row per doc with the cumulative gate
     * flags f1..f5 over the three fingerprints (shared by the stage-count
     * rollup and the survivor projection).
     *
     * The fingerprint frame feeds three plan branches (the two banded-drop
     * subtrees and the final consumer), each of which would re-decode every
-    * payload, so the 44-byte-per-doc frame is persisted eagerly
-    * ([[persistFingerprints]] — lifecycle-tracked, see [[release]]) and
-    * the three codecs run ONCE regardless of corpus size or backing.
+    * payload, so the 44-byte-per-doc frame comes checkpointed from
+    * [[crossmodalFpCached]] and the three codecs run ONCE regardless of
+    * corpus size or backing.
     */
-  /** Session-scoped cache of the CHECKPOINTED crossmodal fingerprint
-    * frame: the funnel, the survivor projection and the train manifest
-    * all decode the same corpus through the same three codecs — decode
-    * once per corpus per session (the [[graft.operators.SuffixArray]]
-    * cache discipline; 44 bytes/doc, wholesale clear-with-unpersist).
-    * Streaming/in-memory frames bypass (the streaming path feeds the
-    * standing digest index instead).
-    */
-  private val crossmodalFpCache = scala.collection.mutable.Map
-    .empty[(String, String, String), DataFrame]
-
-  private def crossmodalFpCached(documents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    if (documents.isStreaming ||
-        documents.queryExecution.logical.exists(_.isInstanceOf[LocalRelation]))
-      return crossmodalFingerprints(documents)
-    val key = graft.operators.SuffixArray.corpusKey(documents)
-    crossmodalFpCache.synchronized(crossmodalFpCache.get(key)) match {
-      case Some(df) => df
-      case None =>
-        val computed = crossmodalFingerprints(documents).localCheckpoint()
-        crossmodalFpCache.synchronized {
-          crossmodalFpCache.get(key) match {
-            case Some(df) =>
-              graft.operators.SuffixArray.freeCheckpoint(computed)
-              df
-            case None =>
-              if (crossmodalFpCache.size >= 4) {
-                crossmodalFpCache.valuesIterator
-                  .foreach(graft.operators.SuffixArray.freeCheckpoint)
-                crossmodalFpCache.clear()
-              }
-              crossmodalFpCache.update(key, computed)
-              computed
-          }
-        }
-    }
-  }
-
   private def crossmodalFlags(
       documents: DataFrame, maxHamming: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

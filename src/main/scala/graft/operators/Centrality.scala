@@ -34,16 +34,14 @@ object Centrality {
     * (src < dst) of the shared-span graph at (k, dfCap): five centrality
     * queries build exactly this frame from the same corpus — the
     * build-the-graph-once pattern, riding the cached
-    * [[Dedup.hashedShingleDfCached]] shingle frame underneath. Key and
-    * eviction discipline match [[SuffixArray.build]]'s cache.
+    * [[Dedup.hashedShingleDfCached]] shingle frame underneath.
+    * [[PlanCache]] discipline.
     */
-  private val pairsCache = scala.collection.mutable.Map
-    .empty[((String, String, String), Int, Int), DataFrame]
+  private val pairsCache = new PlanCache[(Int, Int)]()
 
   private[graft] def sharedPairs(
-      documents: DataFrame, k: Int, dfCap: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    def compute(): DataFrame = {
+      documents: DataFrame, k: Int, dfCap: Int): DataFrame =
+    pairsCache.getOrBuild(documents, (k, dfCap)) {
       val shared = Dedup.hashedShingleDfCached(documents, k)
         .filter(col("df").between(2, dfCap))
         .select(col("sh"), col("doc_id"))
@@ -53,29 +51,6 @@ object Centrality {
         .select(col("doc_id").as("src"), col("dst"))
         .distinct()
     }
-    if (documents.queryExecution.logical.exists(_.isInstanceOf[LocalRelation]))
-      return compute()
-    val key = (SuffixArray.corpusKey(documents), k, dfCap)
-    pairsCache.synchronized(pairsCache.get(key)) match {
-      case Some(df) => df
-      case None =>
-        val computed = compute().localCheckpoint()
-        pairsCache.synchronized {
-          pairsCache.get(key) match {
-            case Some(df) =>
-              SuffixArray.freeCheckpoint(computed) // ours, unseen by anyone
-              df
-            case None =>
-              if (pairsCache.size >= 4) {
-                pairsCache.valuesIterator.foreach(SuffixArray.freeCheckpoint)
-                pairsCache.clear()
-              }
-              pairsCache.update(key, computed)
-              computed
-          }
-        }
-    }
-  }
 
   /** PageRank over the shared-span graph, a fixed number of rounds.
     *
@@ -282,7 +257,7 @@ object Centrality {
         .filter(col("deg") >= k)
         .select(col("src").as("doc_id"))
         .localCheckpoint()
-      if (!(prev eq alive)) SuffixArray.freeCheckpoint(prev)
+      if (!(prev eq alive)) PlanCache.freeCheckpoint(prev)
       counts += alive.count()
       r += 1
     }
@@ -349,7 +324,7 @@ object Centrality {
       changed = next.join(labels.withColumnRenamed("lab", "prev"),
         Seq("doc_id"))
         .filter(col("lab") =!= col("prev")).count()
-      SuffixArray.freeCheckpoint(labels)
+      PlanCache.freeCheckpoint(labels)
       labels = next
       r += 1
     }

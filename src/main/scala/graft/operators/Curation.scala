@@ -23,33 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** The one live flagged-corpus cache per session (the DistributedRank
-    * lifecycle pattern): `base` below feeds three plan branches — the
-    * stage-0-3 aggregate, the span-df derivation, and the stage-4-5 join —
-    * and the branches prune different columns below the dedup-window
-    * exchange, so ReuseExchange cannot collapse them; without a persist
-    * the corpus scan + window shuffle run three times per funnel. The
-    * persist is WIDTH-GATED like Layout.widen: on a narrow local scan the
-    * cache materialization costs more than the recompute (measured +1.1 s
-    * at sf0.1, single parquet file — columnar-encoding the text column
-    * dominates), while at corpus file counts two avoided scans dominate.
-    * A new funnel call releases the previous frame; [[release]] drops the
-    * last one explicitly.
-    */
-  private val liveCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.SparkSession, DataFrame]()
-
-  def release(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prev = liveCache.remove(spark)
-    if (prev != null) prev.unpersist(blocking = false)
-  }
-
-  private def trackPersisted(df: DataFrame): Unit = {
-    val prev = liveCache.put(df.sparkSession, df)
-    if (prev != null) prev.unpersist(blocking = false)
-  }
-
   /** Curriculum ordering (Bengio et al., ICML 2009): easy-first training
     * order with round-robin source interleaving, so no source clumps at
     * any difficulty phase. Difficulty proxy = document length; the
@@ -136,16 +109,21 @@ object Curation {
     // cache-backed recompute). Threshold: recompute under ~1 GiB costs
     // less than materializing the cache (measured +1.1 s at the 5 MB
     // local scale); above it the two avoided scans dominate.
+    //
+    // `base` feeds three plan branches — the stage-0-3 aggregate, the
+    // span-df derivation, and the stage-4-5 join — and the branches prune
+    // different columns below the dedup-window exchange, so ReuseExchange
+    // cannot collapse them. A persisted wide `base` stays pinned in the
+    // [[PlanCache]] registry (one per session) until the next funnel call.
     val scanBytes = documents.queryExecution.optimizedPlan.stats.sizeInBytes
     val base =
       if (scanBytes >= persistThresholdBytes) {
-        val b = base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        trackPersisted(b)
-        b
+        PlanCache.replacePins(documents.sparkSession, this)(Seq(
+          base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))).head
       } else {
         // lifecycle still holds on the recompute path: a narrow funnel
         // call must not leave a PREVIOUS wide call's frame pinned
-        release(documents.sparkSession)
+        PlanCache.releasePins(documents.sparkSession, this)
         base0
       }
 
@@ -301,7 +279,7 @@ object Curation {
             .select(col("doc_id"),
               (col("gain") - coalesce(col("d"), lit(0L))).as("gain"))
             .localCheckpoint()
-          graft.operators.SuffixArray.freeCheckpoint(prev)
+          PlanCache.freeCheckpoint(prev)
         }
       }
       r += 1
@@ -412,21 +390,18 @@ FROM allp ORDER BY pick""".stripMargin
       .orderBy(col("split"))
   }
 
-  /** Session-scoped cache of the regenerated corpus: both consumers
-    * (the per-split rollup and the train-split manifest) and every
-    * bench pass re-derive the same survivor frame, so it is
-    * materialized once per (corpus, k) — the "write the intermediate
-    * dataset" step of a real pipeline. Same key/eviction/uncacheable
-    * rules as the [[SuffixArray]] Ranks cache (inputFiles in the key,
-    * LocalRelations bypass, compute outside the lock).
-    */
   /** Session cache of the coverage trigram frame ([[PlanCache]]
     * discipline) — see [[coverageSelection]].
     */
   private val triCache = new PlanCache[Unit]()
 
-  private val regenCache = scala.collection.mutable.Map.empty[
-    ((String, String, String), Int), DataFrame]
+  /** Session-scoped cache of the regenerated corpus ([[PlanCache]]
+    * discipline): both consumers (the per-split rollup and the
+    * train-split manifest) and every bench pass re-derive the same
+    * survivor frame, so it is materialized once per (corpus, k) — the
+    * "write the intermediate dataset" step of a real pipeline.
+    */
+  private val regenCache = new PlanCache[Int]()
 
   /** The regenerated corpus itself — steps 1-3 of [[regenSplits]]
     * (trim-apply, md5 exact dedup of the edited text, content-hash
@@ -434,30 +409,8 @@ FROM allp ORDER BY pick""".stripMargin
     * SURVIVOR doc with (doc_id, cleaned_text, n_toks, removed_tokens,
     * dups_dropped, split).
     */
-  def regenCorpus(documents: DataFrame, k: Int = 6): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    if (documents.queryExecution.logical.exists(_.isInstanceOf[LocalRelation]))
-      return computeRegenCorpus(documents, k)
-    val key = (SuffixArray.corpusKey(documents), k)
-    regenCache.synchronized(regenCache.get(key)) match {
-      case Some(df) => df
-      case None =>
-        val computed = computeRegenCorpus(documents, k).localCheckpoint()
-        regenCache.synchronized {
-          regenCache.get(key) match {
-            case Some(winner) => // concurrent compute won the race: keep
-              SuffixArray.freeCheckpoint(computed) // ours, unseen by anyone
-              winner
-            case None =>
-              if (regenCache.size >= 4) {
-                regenCache.valuesIterator.foreach(SuffixArray.freeCheckpoint)
-                regenCache.clear()
-              }
-              regenCache.getOrElseUpdate(key, computed)
-          }
-        }
-    }
-  }
+  def regenCorpus(documents: DataFrame, k: Int = 6): DataFrame =
+    regenCache.getOrBuild(documents, k)(computeRegenCorpus(documents, k))
 
   private def computeRegenCorpus(documents: DataFrame, k: Int): DataFrame = {
     val cleaned = SpanDedup.spanTrimApply(documents, k)

@@ -205,44 +205,39 @@ object Dedup {
     *     recomputes at worst), and eviction runs before insert so the map
     *     never exceeds its bound.
     */
-  // key: (corpusKey(documents), corpusKey(pairs), maxIters) — the
-  // canonicalized plan alone collides across same-schema datasets
-  // (relation output canonicalizes to positional ids), so the backing
-  // files ride in each key via [[SuffixArray.corpusKey]].
+  // key: ([[PlanCache.planKey]] of documents, of pairs, maxIters). Not a
+  // [[PlanCache]]: it keys on two frames and stores a lazy plan over the
+  // label checkpoint rather than a checkpoint of its own.
   private val clusterCache = scala.collection.mutable.Map.empty[
     ((String, String, String), (String, String, String), Int), DataFrame]
 
   def nearDupClusters(
       documents: DataFrame,
       pairs: DataFrame,
-      maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val uncacheable =
-      documents.queryExecution.logical.exists(_.isInstanceOf[LocalRelation]) ||
-        pairs.queryExecution.logical.exists(_.isInstanceOf[LocalRelation])
-    if (uncacheable) return computeNearDupClusters(documents, pairs, maxIters)
-    val key = (
-      SuffixArray.corpusKey(documents), SuffixArray.corpusKey(pairs),
-      maxIters)
-    clusterCache.synchronized(clusterCache.get(key)) match {
-      case Some(cached) => cached
-      case None =>
-        val computed = computeNearDupClusters(documents, pairs, maxIters)
-        clusterCache.synchronized {
-          clusterCache.get(key) match {
-            case Some(winner) => // concurrent compute won the race: keep
-              SuffixArray.freeCheckpoint(computed) // ours, unseen by anyone
-              winner
-            case None =>
-              if (clusterCache.size >= 16) {
-                clusterCache.valuesIterator.foreach(SuffixArray.freeCheckpoint)
-                clusterCache.clear()
+      maxIters: Int = 20): DataFrame =
+    PlanCache.planKey(documents).zip(PlanCache.planKey(pairs)) match {
+      case None => computeNearDupClusters(documents, pairs, maxIters)
+      case Some((docsKey, pairsKey)) =>
+        val key = (docsKey, pairsKey, maxIters)
+        clusterCache.synchronized(clusterCache.get(key)) match {
+          case Some(cached) => cached
+          case None =>
+            val computed = computeNearDupClusters(documents, pairs, maxIters)
+            clusterCache.synchronized {
+              clusterCache.get(key) match {
+                case Some(winner) => // concurrent compute won the race: keep
+                  PlanCache.freeCheckpoint(computed) // ours, unseen by anyone
+                  winner
+                case None =>
+                  if (clusterCache.size >= 16) {
+                    clusterCache.valuesIterator.foreach(PlanCache.freeCheckpoint)
+                    clusterCache.clear()
+                  }
+                  clusterCache.getOrElseUpdate(key, computed)
               }
-              clusterCache.getOrElseUpdate(key, computed)
-          }
+            }
         }
     }
-  }
 
   /** Task-count target for the per-round label frames: one task per
     * `rowsPerTask` edge rows, floored at 4 (don't serialize tiny graphs
@@ -348,15 +343,15 @@ object Dedup {
             .join(next.withColumnRenamed("cluster_id", "prev"), "doc_id")
             .filter(col("cluster_id") =!= col("prev"))
             .count()
-          SuffixArray.freeCheckpoint(nextCp)
+          PlanCache.freeCheckpoint(nextCp)
           next = jumped
           nextCp = jumpedCp
         }
-        SuffixArray.freeCheckpoint(labelsCp)
+        PlanCache.freeCheckpoint(labelsCp)
         labels = next
         labelsCp = nextCp
       }
-      SuffixArray.freeCheckpoint(propCp)
+      PlanCache.freeCheckpoint(propCp)
       iter += 1
     }
     if (merging > 0)
@@ -364,6 +359,9 @@ object Dedup {
         s"nearDupClusters did not converge in $maxIters rounds ($merging roots " +
           s"still merging) — a component holds more than ~2^$maxIters hooked " +
           "trees; raise maxIters")
+    // The result reads only the labels: the doubled edge list would
+    // otherwise stay checkpointed for the rest of the session.
+    PlanCache.freeCheckpoint(edges)
     // Build the result on the CHECKPOINTED frame (labelsCp), not the
     // stats-reset view: the returned plan then contains the checkpoint's
     // LogicalRDD, so clusterCache eviction (freeCheckpoint) releases the
@@ -676,39 +674,13 @@ object Dedup {
   /** Session-scoped cache of the CHECKPOINTED [[hashedShingleDf]] frame:
     * six centrality/graph queries derive their shared-span graph from
     * the same (doc_id, sh, df) frame over the same corpus — the
-    * build-the-index-once pattern of [[SuffixArray.build]], with the
-    * same key discipline (LocalRelations bypass; applicationId keys out
-    * dead checkpoints; wholesale clear-with-unpersist at capacity).
+    * build-the-index-once pattern, [[PlanCache]] discipline.
     */
-  private val shingleDfCache =
-    scala.collection.mutable.Map.empty[((String, String, String), Int), DataFrame]
+  private val shingleDfCache = new PlanCache[Int]()
 
   private[graft] def hashedShingleDfCached(
-      documents: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    if (documents.queryExecution.logical.exists(_.isInstanceOf[LocalRelation]))
-      return hashedShingleDf(documents, k)
-    val key = (SuffixArray.corpusKey(documents), k)
-    shingleDfCache.synchronized(shingleDfCache.get(key)) match {
-      case Some(df) => df
-      case None =>
-        val computed = hashedShingleDf(documents, k).localCheckpoint()
-        shingleDfCache.synchronized {
-          shingleDfCache.get(key) match {
-            case Some(df) =>
-              SuffixArray.freeCheckpoint(computed) // ours, unseen by anyone
-              df
-            case None =>
-              if (shingleDfCache.size >= 4) {
-                shingleDfCache.valuesIterator.foreach(SuffixArray.freeCheckpoint)
-                shingleDfCache.clear()
-              }
-              shingleDfCache.update(key, computed)
-              computed
-          }
-        }
-    }
-  }
+      documents: DataFrame, k: Int): DataFrame =
+    shingleDfCache.getOrBuild(documents, k)(hashedShingleDf(documents, k))
 
   /** Cross-document duplicated n-gram fraction — the document-level signal of
     * the exact-substring-dedup family (Lee et al. 2021, "Deduplicating

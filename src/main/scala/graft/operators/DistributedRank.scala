@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,14 +36,15 @@ import org.apache.spark.sql.functions._
   *
   * Cache lifecycle: every persisted ranged frame is tracked per session
   * and stays PINNED until [[release]] — callers that rank repeatedly
-  * must call release() when done with the results (see the liveCache
-  * scaladoc for why auto-evicting the previous frame is unsound).
+  * must call release() when done with the results (see [[release]] for
+  * why auto-evicting the previous frame is unsound).
   */
 object DistributedRank {
 
-  /** Live ranged-frame cache per session. Each ranking call persists a
-    * fresh range-partitioned frame; [[release]] returns the blocks when
-    * the caller is done ranking (e.g. at the end of a service request).
+  /** Each ranking call persists a fresh range-partitioned frame and pins
+    * it in the [[PlanCache]] registry beside the session's earlier ones;
+    * [[release]] returns the blocks when the caller is done ranking (e.g.
+    * at the end of a service request).
     *
     * Every live frame stays pinned until release() — an earlier policy
     * kept only the LATEST frame and unpersisted the previous one on each
@@ -59,26 +58,10 @@ object DistributedRank {
     * requires the pin for as long as any downstream plan may re-read the
     * frame; the memory bound is release()'s job, not an auto-eviction's.
     */
-  private val liveCache =
-    new ConcurrentHashMap[SparkSession, List[DataFrame]]()
-
-  /** Unpersist ALL of the session's ranged frames (no-op if none). */
-  def release(spark: SparkSession): Unit = {
-    val prev = liveCache.remove(spark)
-    if (prev != null) prev.foreach(_.unpersist(blocking = false))
-  }
-
-  /** The session's currently-pinned ranged frames (test hook: lets specs
-    * assert on DistributedRank-OWNED cache state rather than the global
-    * `getPersistentRDDs` count, which any concurrent suite perturbs).
-    */
-  private[graft] def liveFrames(spark: SparkSession): List[DataFrame] = {
-    val cur = liveCache.get(spark)
-    if (cur == null) Nil else cur
-  }
+  def release(spark: SparkSession): Unit = PlanCache.releasePins(spark, this)
 
   private def trackPersisted(ranged: DataFrame): Unit =
-    liveCache.merge(ranged.sparkSession, List(ranged), (a, b) => b ::: a)
+    PlanCache.addPins(ranged.sparkSession, this, ranged)
 
   /** (df + rankCol [1..n], n) — n comes from the same per-partition
     * counts that build the offsets, so ranking costs exactly one

@@ -132,56 +132,31 @@ object DomainClassifier {
   }
 
   // Session fit cache — the QualityClassifier.fits pattern.
-  private val fits =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Long]]]()
-
-  // One live persisted feature frame per session (the QualityClassifier
-  // lifecycle): the cold confusion/train call keeps its frame pinned
-  // through the lazy consumers; the next call (or release) drops it.
-  private val liveFp = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, DataFrame]()
-
-  /** Unpersist the session's live feature frame, if any. */
-  def release(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prev = liveFp.remove(spark)
-    if (prev != null) prev.unpersist(blocking = false)
-  }
+  private val fits = new FitMemo[(Int, Int, Long), Array[Array[Long]]](32)
 
   private def fitCached(documents: DataFrame, dim: Int, iters: Int,
       lr: Long): Array[Array[Long]] =
-    Similarity.fitCacheKey(documents) match {
-      case Some(key) =>
-        if (fits.size > 32) fits.clear()
-        fits.computeIfAbsent(s"$key\ndc:$dim:$iters:$lr",
-          _ => fit(documents, dim, iters, lr))
-      case None => fit(documents, dim, iters, lr)
-    }
+    fits.getOrFit(documents, (dim, iters, lr))(fit(documents, dim, iters, lr))
 
   /** Fit-cache-aware (frame, weights): on a MISS the hashing pass runs
     * once — the frame is persisted through both the fit and the returned
-    * lazy consumer (released on the next call); on a HIT scoring is the
-    * only pass, and the previous cold call's still-pinned frame serves it
-    * via CacheManager plan matching when available.
+    * lazy consumer (one per session in the [[PlanCache]] pin registry,
+    * released by the next call); on a HIT scoring is the only pass, and
+    * the previous cold call's still-pinned frame serves it via
+    * CacheManager plan matching when available.
     */
   private def frameAndFit(documents: DataFrame, dim: Int, iters: Int,
-      lr: Long): (DataFrame, Array[Array[Long]]) = {
-    val key = Similarity.fitCacheKey(documents)
-      .map(k => s"$k\ndc:$dim:$iters:$lr")
-    key.flatMap(k => Option(fits.get(k))) match {
+      lr: Long): (DataFrame, Array[Array[Long]]) =
+    fits.get(documents, (dim, iters, lr)) match {
       case Some(w0) => (featureFrame(documents, dim), w0)
       case None =>
-        val pinned = featureFrame(documents, dim)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val prev = liveFp.put(documents.sparkSession, pinned)
-        if (prev != null) prev.unpersist(blocking = false)
+        val pinned = PlanCache.replacePins(documents.sparkSession, this)(Seq(
+          featureFrame(documents, dim)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))).head
         val w0 = fitLoop(pinned, dim, iters, lr)
-        key.foreach { k =>
-          if (fits.size > 32) fits.clear()
-          fits.put(k, w0)
-        }
+        fits.put(documents, (dim, iters, lr), w0)
         (pinned, w0)
     }
-  }
 
   /** The trained model as a frame: (head, b, w) — K·(dim+1) rows. */
   def trainedWeights(documents: DataFrame, dim: Int = DefaultDim,

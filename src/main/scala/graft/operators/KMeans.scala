@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -151,18 +149,11 @@ object KMeans {
   }
 
   // Session fit cache so the cluster/prototype/convergence queries over
-  // the same corpus share one fit per (input, k, iters). Keyed by the
-  // canonicalized-plan + inputFiles key (Similarity.fitCacheKey — the
-  // r10 lesson: Spark 4 elides parquet paths from plan strings).
-  private val fits = new ConcurrentHashMap[String, Array[Array[Long]]]()
+  // the same corpus share one fit per (input, k, iters).
+  private val fits = new FitMemo[(Int, Int), Array[Array[Long]]](32)
 
   private def fitFpCached(fp: DataFrame, k: Int, iters: Int): Array[Array[Long]] =
-    Similarity.fitCacheKey(fp) match {
-      case Some(key) =>
-        if (fits.size > 32) fits.clear() // plain long arrays — nothing to unpersist
-        fits.computeIfAbsent(s"$key\nkm:$k:$iters", _ => fitFp(fp, k, iters))
-      case None => fitFp(fp, k, iters)
-    }
+    fits.getOrFit(fp, (k, iters))(fitFp(fp, k, iters))
 
   private def fitCached(embeddings: DataFrame, k: Int, iters: Int): Array[Array[Long]] =
     fitFpCached(fpFrame(embeddings), k, iters)

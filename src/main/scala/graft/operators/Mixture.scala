@@ -30,27 +30,17 @@ import org.apache.spark.sql.functions._
   */
 object Mixture {
 
-  /** Live persisted (doc_id, is_ref, bucket, pri) frame of the session's
-    * most recent [[distMatchedSample]] call — the
-    * [[graft.multimodal.Multimodal]] lifecycle pattern: a new call
-    * releases the previous frame; bounded at one frame per session.
-    */
-  private val liveDistMatchedBase = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, DataFrame]()
-
   /** Unpersist the session's live dist-matched base frame, if any. */
-  def releaseDistMatched(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prev = liveDistMatchedBase.remove(spark)
-    if (prev != null) prev.unpersist(blocking = false)
-  }
+  def releaseDistMatched(spark: org.apache.spark.sql.SparkSession): Unit =
+    PlanCache.releasePins(spark, this)
 
-  private def pinDistMatchedBase(base: DataFrame): DataFrame = {
-    releaseDistMatched(base.sparkSession)
-    val cached = base.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveDistMatchedBase.put(base.sparkSession, cached)
-    cached
-  }
+  /** Persist the (doc_id, is_ref, bucket, pri) frame of a
+    * [[distMatchedSample]] call and pin it in the [[PlanCache]] registry:
+    * a new call releases the previous frame, so one frame per session.
+    */
+  private def pinDistMatchedBase(base: DataFrame): DataFrame =
+    PlanCache.replacePins(base.sparkSession, this)(Seq(
+      base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))).head
 
   /** The 53-bit integer content priority — the dyadic numerator of
     * [[textUniform]] (identical order; oracles spell it `mx // 2048`).

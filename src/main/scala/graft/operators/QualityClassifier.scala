@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -221,29 +219,11 @@ object QualityClassifier {
 
   // Session fit cache: the train/score queries over the same corpus share
   // one fit per (input, dim, iters, lr) — the KMeans.fits pattern.
-  private val fits = new ConcurrentHashMap[String, Array[Long]]()
-
-  // One live persisted feature frame per session (the Curation lifecycle):
-  // scoreDocs keeps its cold-path frame pinned through the lazy scoring
-  // consumer; the next call (or release) drops it.
-  private val liveFp = new ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, DataFrame]()
-
-  /** Unpersist the session's live feature frame, if any. */
-  def release(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prev = liveFp.remove(spark)
-    if (prev != null) prev.unpersist(blocking = false)
-  }
+  private val fits = new FitMemo[(Int, Int, Long), Array[Long]](32)
 
   private def fitCached(
       documents: DataFrame, dim: Int, iters: Int, lr: Long): Array[Long] =
-    Similarity.fitCacheKey(documents) match {
-      case Some(key) =>
-        if (fits.size > 32) fits.clear() // plain long arrays — no unpersist
-        fits.computeIfAbsent(s"$key\nqc:$dim:$iters:$lr",
-          _ => fit(documents, dim, iters, lr))
-      case None => fit(documents, dim, iters, lr)
-    }
+    fits.getOrFit(documents, (dim, iters, lr))(fit(documents, dim, iters, lr))
 
   /** The trained model as a frame: one row per weight (bucket index,
     * fixed-point weight; bias at index `dim`).
@@ -302,23 +282,17 @@ object QualityClassifier {
     // fit-cache-aware frame sharing: on a MISS the n-gram hashing pass
     // (the dominant cost) runs once — the frame is persisted, the fit
     // loop trains over it, and the returned lazy scoring plan reads the
-    // same pinned frame (released on the next call / release()). On a
-    // HIT, scoring is the only pass, so pinning would be pure overhead.
-    val key = Similarity.fitCacheKey(documents)
-      .map(k => s"$k\nqc:$dim:$iters:$lr")
-    val hit = key.flatMap(k => Option(fits.get(k)))
-    val (fp, w) = hit match {
+    // same pinned frame (one per session in the [[PlanCache]] pin
+    // registry, released by the next call). On a HIT, scoring is the only
+    // pass, so pinning would be pure overhead.
+    val (fp, w) = fits.get(documents, (dim, iters, lr)) match {
       case Some(w0) => (featureFrame(documents, dim), w0)
       case None =>
-        val pinned = featureFrame(documents, dim)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val prev = liveFp.put(documents.sparkSession, pinned)
-        if (prev != null) prev.unpersist(blocking = false)
+        val pinned = PlanCache.replacePins(documents.sparkSession, this)(Seq(
+          featureFrame(documents, dim)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))).head
         val w0 = fitLoop(pinned, dim, iters, lr)
-        key.foreach { k =>
-          if (fits.size > 32) fits.clear()
-          fits.put(k, w0)
-        }
+        fits.put(documents, (dim, iters, lr), w0)
         (pinned, w0)
     }
     val prior = fp.agg(count(lit(1)).as("n_all"),

@@ -107,35 +107,11 @@ object Similarity {
 
   /** IVF coarse-quantizer cache: an inverted-file index is built once and
     * queried many times — rebuilding the quantizer per query call would
-    * charge the index build to every search. Keyed by the full canonicalized
-    * input plan (string equality, not a hash — no collision risk) +
-    * applicationId + parameters; seeded fits are deterministic, so a cache
-    * hit is exact. Like any ANN index, it does NOT track mutation of the
-    * underlying files; bounded by wholesale eviction at 16 entries.
+    * charge the index build to every search. Keyed by
+    * [[PlanCache.planKey]] + parameters; seeded fits are deterministic, so
+    * a hit is exact. Bounded by wholesale eviction past 16 entries.
     */
-  private val quantizerCache =
-    scala.collection.mutable.Map.empty[(String, Int, Long), Array[Array[Double]]]
-
-  /** Cache key for a fit over `df`, or None when the plan contains a
-    * LocalRelation: an in-memory relation canonicalizes to its SCHEMA only
-    * (the data is invisible to the key), so two different local datasets
-    * with the same schema would collide on one entry and silently share
-    * centroids — same guard as Dedup.nearDupClusters' clusterCache.
-    * File relations do NOT key safely on the plan string alone: in
-    * Spark 4 a fresh `spark.read.parquet(p)` logical plan prints as
-    * `UnresolvedDataSource ... paths: 1 provided` with the path elided
-    * (verified empirically in the r10 SuffixArraySpec cache test, where
-    * two same-schema fixtures collided), so the backing files join the
-    * key explicitly; applicationId scopes entries to one SparkContext
-    * lifetime.
-    */
-  private[graft] def fitCacheKey(df: DataFrame): Option[String] = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    if (df.queryExecution.logical.exists(_.isInstanceOf[LocalRelation])) None
-    else Some(df.sparkSession.sparkContext.applicationId + "\n" +
-      df.queryExecution.logical.canonicalized.toString + "\n" +
-      df.inputFiles.sorted.mkString(","))
-  }
+  private val quantizerCache = new FitMemo[(Int, Long), Array[Array[Double]]](16)
 
   /** Fitted IVF / PQ models (centroids or codebooks + the call's
     * parameters) — read by the oracle-SQL generator after a Verify run to
@@ -149,7 +125,7 @@ object Similarity {
     * pin from some other ANN call can never masquerade as the verified
     * run's model. In-memory (LocalRelation) inputs key by schema only
     * (their data is invisible to plan canonicalization — same caveat as
-    * [[fitCacheKey]]), which is fine for pinning: the Verify flow only
+    * [[PlanCache.planKey]]), which is fine for pinning: the Verify flow only
     * ever pins file-backed tables.
     */
   final case class IvfFit(
@@ -181,7 +157,7 @@ object Similarity {
     new java.util.concurrent.ConcurrentHashMap[String, IvfPqAppendFit]()
 
   private def pinKey(embeddings: DataFrame, params: String): String =
-    fitCacheKey(embeddings)
+    PlanCache.planKey(embeddings).map(_.productIterator.mkString("\n"))
       .getOrElse("<local:" + embeddings.schema.simpleString + ">") + "|" + params
 
   /** The fit recorded for exactly this (dataset, params) call, if it ran. */
@@ -328,24 +304,12 @@ object Similarity {
           books.filter(_ => needBooks.isDefined))
       case _ =>
         val centers = needCenters.map { case (nlist, seed) =>
-          fitCacheKey(embeddings) match {
-            case None => fitCoarseQuantizer(embDouble, nlist, seed)
-            case Some(planKey) => quantizerCache.synchronized {
-              if (quantizerCache.size > 16) quantizerCache.clear()
-              quantizerCache.getOrElseUpdate(
-                (planKey, nlist, seed), fitCoarseQuantizer(embDouble, nlist, seed))
-            }
-          }
+          quantizerCache.getOrFit(embeddings, (nlist, seed))(
+            fitCoarseQuantizer(embDouble, nlist, seed))
         }
         val books = needBooks.map { case (m, ksub, seed) =>
-          fitCacheKey(embeddings) match {
-            case None => fitPqCodebooks(embDouble, m, ksub, seed)
-            case Some(planKey) => pqCache.synchronized {
-              if (pqCache.size > 16) pqCache.clear()
-              pqCache.getOrElseUpdate(
-                (planKey, m, ksub, seed), fitPqCodebooks(embDouble, m, ksub, seed))
-            }
-          }
+          pqCache.getOrFit(embeddings, (m, ksub, seed))(
+            fitPqCodebooks(embDouble, m, ksub, seed))
         }
         indexPath.foreach(p => saveIndexModel(spark, p, centers, books))
         (centers, books)
@@ -718,8 +682,7 @@ object Similarity {
   /** PQ codebook cache (same rationale as [[quantizerCache]]): m subspace
     * codebooks, each ksub x dsub.
     */
-  private val pqCache =
-    scala.collection.mutable.Map.empty[(String, Int, Int, Long), Array[Array[Array[Double]]]]
+  private val pqCache = new FitMemo[(Int, Int, Long), Array[Array[Array[Double]]]](16)
 
   /** Train product-quantization codebooks (Jégou, Douze, Schmid: "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011): split the
@@ -1235,15 +1198,8 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("embedding"))
       .filter(dot(col("embedding"), col("embedding")).isNotNull)
-    val centers: Array[Array[Double]] = fitCacheKey(embeddings) match {
-      case None => fitCoarseQuantizer(embDouble.drop("label"), nlist, seed)
-      case Some(planKey) => quantizerCache.synchronized {
-        if (quantizerCache.size > 16) quantizerCache.clear()
-        quantizerCache.getOrElseUpdate(
-          (planKey, nlist, seed),
-          fitCoarseQuantizer(embDouble.drop("label"), nlist, seed))
-      }
-    }
+    val centers = quantizerCache.getOrFit(embeddings, (nlist, seed))(
+      fitCoarseQuantizer(embDouble.drop("label"), nlist, seed))
     if (caFits.size > 16) caFits.clear()
     caFits.put(pinKey(embeddings, s"ca:$nlist:$seed"), CaFit(centers, nlist))
 
@@ -1291,14 +1247,8 @@ object Similarity {
     val embDouble = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       .filter(dot(col("embedding"), col("embedding")).isNotNull)
-    val centers: Array[Array[Double]] = fitCacheKey(embeddings) match {
-      case None => fitCoarseQuantizer(embDouble, nlist, seed)
-      case Some(planKey) => quantizerCache.synchronized {
-        if (quantizerCache.size > 16) quantizerCache.clear()
-        quantizerCache.getOrElseUpdate(
-          (planKey, nlist, seed), fitCoarseQuantizer(embDouble, nlist, seed))
-      }
-    }
+    val centers = quantizerCache.getOrFit(embeddings, (nlist, seed))(
+      fitCoarseQuantizer(embDouble, nlist, seed))
     if (semFits.size > 16) semFits.clear()
     semFits.put(
       pinKey(embeddings, s"sem:$nlist:$threshold:$seed"),
@@ -1658,7 +1608,7 @@ object Similarity {
             least(coalesce(col("dmin"), col("d_new")), col("d_new"))
               .as("dmin"))
           .localCheckpoint()
-        SuffixArray.freeCheckpoint(prev)
+        PlanCache.freeCheckpoint(prev)
         val pick = state
           .orderBy(col("dmin").desc, col("vec_id")).limit(1).collect()
         if (pick.isEmpty) exhausted = true // fewer points than k: done

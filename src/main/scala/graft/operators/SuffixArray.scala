@@ -94,44 +94,15 @@ object SuffixArray {
   /** Session-scoped Ranks cache: the suffix index is derived once per
     * corpus and consumed by several span queries (head, LRS,
     * contamination, span plans) — exactly the production pattern of
-    * "build the index once, run span queries against it". Same caveats
-    * as the [[Dedup]] cluster-label cache: LocalRelation plans are
-    * never cached (canonicalization prints only their schema, so two
-    * in-memory fixtures would collide), the applicationId keys out
-    * frames whose localCheckpoint blocks died with a previous context,
-    * and computation runs outside the lock. Value = (stopBlock the
-    * build was requested with, the Ranks).
+    * "build the index once, run span queries against it". Keyed by
+    * [[PlanCache.planKey]] (LocalRelations bypass), computed outside the
+    * lock, evicted wholesale at [[PlanCache.Bound]] like a [[PlanCache]];
+    * not one itself, because an unsatisfying entry is resumed rather
+    * than rebuilt. Value = (stopBlock the build was requested with, the
+    * Ranks).
     */
   private val ranksCache =
     scala.collection.mutable.Map.empty[(String, String, String), (Long, Ranks)]
-
-  /** Cache key for a corpus frame. The canonicalized plan alone is NOT
-    * sufficient: Spark canonicalization normalizes relation output to
-    * positional ids, so two parquet reads of DIFFERENT datasets with the
-    * same schema canonicalize to the same string (caught by the
-    * SuffixArraySpec cache test — a 36-char fixture served a 96-char
-    * corpus's request). The backing files join the key to pin the
-    * actual data.
-    */
-  private[graft] def corpusKey(df: DataFrame): (String, String, String) = (
-    df.sparkSession.sparkContext.applicationId,
-    df.queryExecution.logical.canonicalized.toString,
-    df.inputFiles.sorted.mkString(","))
-
-  /** Release the block-manager storage behind a localCheckpoint'd frame
-    * when a session cache evicts it: walk the plan for LogicalRDD leaves
-    * (what localCheckpoint compiles to) and unpersist their RDDs
-    * (non-blocking). Without this, every evicted or race-discarded cache
-    * entry leaks its checkpoint blocks for the SparkContext lifetime.
-    * Callers only free frames whose results prior consumers have already
-    * materialized (session caches evict wholesale between corpora).
-    */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false): Unit
-      case _ => ()
-    }
 
   /** A cached build serves a request iff it was built at least as deep
     * (builtStop >= requested), or its chain terminated for a reason a
@@ -148,11 +119,10 @@ object SuffixArray {
     * [[ranksCache]].
     */
   def build(documents: DataFrame, stopBlock: Long = Long.MaxValue): Ranks = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val uncacheable =
-      documents.queryExecution.logical.exists(_.isInstanceOf[LocalRelation])
-    if (uncacheable) return computeBuild(documents, stopBlock)
-    val key = corpusKey(documents)
+    val key = PlanCache.planKey(documents) match {
+      case Some(k) => k
+      case None => return computeBuild(documents, stopBlock)
+    }
     ranksCache.synchronized(ranksCache.get(key)) match {
       case Some((builtStop, r)) if satisfies(builtStop, r, stopBlock) => r
       case other =>
@@ -172,15 +142,15 @@ object SuffixArray {
             case Some((builtStop, r)) if satisfies(builtStop, r, stopBlock) =>
               val published = r.levels.toSet ++ resume.map(_.levels.toSet)
                 .getOrElse(Set.empty[DataFrame])
-              computed.levels.filterNot(published).foreach(freeCheckpoint)
+              computed.levels.filterNot(published).foreach(PlanCache.freeCheckpoint)
               r
             case replaced =>
-              if (ranksCache.size >= 4) {
+              if (ranksCache.size >= PlanCache.Bound) {
                 ranksCache.valuesIterator
-                  .foreach(_._2.levels.filterNot(live).foreach(freeCheckpoint))
+                  .foreach(_._2.levels.filterNot(live).foreach(PlanCache.freeCheckpoint))
                 ranksCache.clear()
               } else replaced.foreach(
-                _._2.levels.filterNot(live).foreach(freeCheckpoint))
+                _._2.levels.filterNot(live).foreach(PlanCache.freeCheckpoint))
               ranksCache.update(key, (stopBlock, computed))
               computed
           }
@@ -279,7 +249,7 @@ object SuffixArray {
         .select(col("doc_id"), col("pos"), col("rem"), col("r")))
       dBound = blockRank.count() // exact distinct count (dense rank)
       DistributedRank.release(spark)
-      freeCheckpoint(checkpointedBase)
+      PlanCache.freeCheckpoint(checkpointedBase)
       distinctKnown = dBound
     }
     runDoubling(documents, stopBlock, n, maxLen, asciiOk,
@@ -524,10 +494,10 @@ object SuffixArray {
       val (fastDepth, dupKeys, nCand) =
         if (nLast > 0) (ranks.blocks.size - 1, lastKeys, nLast)
         else if (ranks.blocks.size >= 2) {
-          freeCheckpoint(lastKeys)
+          PlanCache.freeCheckpoint(lastKeys)
           val (k2, n2) = dupPass(ranks.blocks.size - 2)
           (ranks.blocks.size - 2, k2, n2)
-        } else { freeCheckpoint(lastKeys); (-1, lastKeys, 0L) }
+        } else { PlanCache.freeCheckpoint(lastKeys); (-1, lastKeys, 0L) }
       val b = if (fastDepth >= 0) ranks.blocks(fastDepth) else 1L
       var cap = math.min(ranks.maxLen, math.max(2 * b, 64L))
       if (fastDepth >= 0 && nCand > 0 && nCand <= MaxLrsCandidates &&
@@ -561,7 +531,7 @@ object SuffixArray {
         // re-materialize with a larger cap (geometric, still within the
         // byte budget or we bail to the bisection)
         while (lrs >= cap && cap < ranks.maxLen && !blown) {
-          freeCheckpoint(cf)
+          PlanCache.freeCheckpoint(cf)
           cap = math.min(ranks.maxLen, cap * 4)
           if (nCand * cap > LrsByteBudget) blown = true
           else { cf = cappedCands(cap); lrs = lrsOf(cf) }

@@ -193,7 +193,7 @@ class AnalyticsSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
-    // Assert ONLY on DistributedRank-owned frames (liveFrames + each
+    // Assert ONLY on DistributedRank-owned frames (pinnedFrames + each
     // frame's cacheManager storage level) — the global getPersistentRDDs
     // count is perturbed by any concurrently-running suite's caches
     // (Dedup cluster labels, ANN fits), which made the old formulation
@@ -206,9 +206,10 @@ class AnalyticsSpec extends SparkTestBase {
         .withGlobalRank(df, Seq(col("v"), col("id")), rankCol = "r")
         .count() // materialize: the ranged frame is cached during this call
       // every live frame MUST stay pinned (auto-evicting the previous one
-      // corrupted chained rankings — see the liveCache scaladoc), and the
+      // corrupted chained rankings — see the DistributedRank.release scaladoc), and the
       // tracked count must equal the number of ranking calls
-      val frames = graft.operators.DistributedRank.liveFrames(spark)
+      val frames = graft.operators.PlanCache
+        .pinnedFrames(spark, graft.operators.DistributedRank)
       assert(frames.size == round,
         s"round $round tracked ${frames.size} frames, expected $round")
       frames.foreach { f =>
@@ -216,9 +217,11 @@ class AnalyticsSpec extends SparkTestBase {
           s"round $round: a live ranged frame was evicted before release()")
       }
     }
-    val pinned = graft.operators.DistributedRank.liveFrames(spark)
+    val pinned = graft.operators.PlanCache
+      .pinnedFrames(spark, graft.operators.DistributedRank)
     graft.operators.DistributedRank.release(spark)
-    assert(graft.operators.DistributedRank.liveFrames(spark).isEmpty,
+    assert(graft.operators.PlanCache
+      .pinnedFrames(spark, graft.operators.DistributedRank).isEmpty,
       "release() left frames tracked")
     // unpersist drops the cacheManager entry synchronously (block
     // cleanup is async but storageLevel reads the cacheManager)

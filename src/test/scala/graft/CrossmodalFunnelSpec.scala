@@ -138,7 +138,7 @@ class CrossmodalFunnelSpec extends SparkTestBase {
     assert(second == first)
     val pinned = spark.sparkContext.getPersistentRDDs.size
     assert(pinned > 0)
-    Multimodal.release(spark)
+    graft.operators.PlanCache.releasePins(spark, Multimodal)
     // unpersist is async (blocking = false): poll briefly for the drop
     val deadline = System.nanoTime + 10_000_000_000L
     while (spark.sparkContext.getPersistentRDDs.size >= pinned &&

@@ -219,6 +219,36 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L))
   }
 
+  test("nearDupClusters: a cold file-backed call keeps only the checkpoints its result reads") {
+    // Scoped to RDDs created during this call (ids between two probes),
+    // not the global persistent-RDD count other suites' caches perturb.
+    // The snapshot is taken as the call returns and holds each RDD
+    // strongly, so the ContextCleaner cannot unpersist an unreachable
+    // leaked checkpoint behind the check's back.
+    val dir = java.nio.file.Files.createTempDirectory("graft_ndc_leak").toString
+    try {
+      Seq(1L, 2L, 3L, 4L, 9L).toDF("doc_id").write.parquet(s"$dir/docs")
+      Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("doc_a", "doc_b")
+        .write.parquet(s"$dir/pairs")
+      val sc = spark.sparkContext
+      val firstId = sc.emptyRDD[Int].id
+      val out = Dedup.nearDupClusters(
+        spark.read.parquet(s"$dir/docs"), spark.read.parquet(s"$dir/pairs"))
+      val persisted = sc.getPersistentRDDs
+      val lastId = sc.emptyRDD[Int].id
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L))
+      val read = out.queryExecution.logical.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+      val leaked = persisted.collect {
+        case (id, rdd) if id > firstId && id < lastId && !read(id) &&
+            rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE => id
+      }
+      assert(leaked.isEmpty, s"checkpoints left persisted, unread by the result: $leaked")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("exact dedup groups partition the corpus") {
     val total = docs.count()
     val g = Dedup.exactGroups(docs).agg(sum("dup_count")).as[Long].head

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{DistributedRank, Mixture, QualityClassifier}
+import graft.operators.{DistributedRank, Mixture, PlanCache, QualityClassifier}
 import org.apache.spark.sql.functions._
 
 /** Invariants of the round-12 session-3 additions: distribution-matched
@@ -104,7 +104,7 @@ class DistMatchedOrcSpec extends SparkTestBase {
       }
     } finally {
       cal.unpersist(); DistributedRank.release(spark)
-      QualityClassifier.release(spark)
+      PlanCache.releasePins(spark, QualityClassifier)
     }
   }
 
@@ -183,7 +183,7 @@ class DistMatchedOrcSpec extends SparkTestBase {
       // same rational, n_pos·n_neg | u2 offsets differ by exactly 1e6·den)
       assert(gini == 2 * aucMicros - 1000000L ||
         math.abs(gini - (2 * aucMicros - 1000000L)) <= 1L)
-    } finally QualityClassifier.release(spark)
+    } finally PlanCache.releasePins(spark, QualityClassifier)
   }
 
   test("headAuc: one row per head, positives partition the corpus, micros in range") {
@@ -201,7 +201,7 @@ class DistMatchedOrcSpec extends SparkTestBase {
         val (p, n) = (r.getAs[Long]("n_pos"), r.getAs[Long]("n_neg"))
         if (p == 0L || n == 0L) assert(auc == 0L) // degenerate contract
       }
-    } finally graft.operators.DomainClassifier.release(spark)
+    } finally PlanCache.releasePins(spark, graft.operators.DomainClassifier)
   }
 
   test("ORC round trip is value-identical to the source events frame") {

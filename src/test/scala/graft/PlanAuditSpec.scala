@@ -106,7 +106,8 @@ class PlanAuditSpec extends SparkTestBase {
             org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]),
           ls.count(_.isInstanceOf[
             org.apache.spark.sql.execution.FileSourceScanExec]))
-      } finally graft.operators.Curation.release(spark) // never leak the cache
+      } finally graft.operators.PlanCache // never leak the cache
+          .releasePins(spark, graft.operators.Curation)
     assert(cacheScans >= 2,
       s"stage branches must read the persisted frame: $cacheScans cache scans")
     // the only parquet scan allowed is the one materializing the cache

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.SuffixArray
+import graft.operators.{PlanCache, SuffixArray}
 import org.apache.spark.sql.functions._
 
 class SuffixArraySpec extends SparkTestBase {
@@ -120,9 +120,9 @@ class SuffixArraySpec extends SparkTestBase {
       Seq((2L, "bbb")).toDF("doc_id", "text").write.mode("overwrite").parquet(d2)
       val a = spark.read.parquet(d1)
       val b = spark.read.parquet(d2)
-      assert(SuffixArray.corpusKey(a) != SuffixArray.corpusKey(b))
-      val ka = graft.operators.Similarity.fitCacheKey(a)
-      val kb = graft.operators.Similarity.fitCacheKey(b)
+      assert(PlanCache.planKey(a) != PlanCache.planKey(b))
+      val ka = PlanCache.planKey(a)
+      val kb = PlanCache.planKey(b)
       assert(ka.isDefined && kb.isDefined && ka != kb)
       // the regenerated-corpus cache rides the same key: same frame hits,
       // different dataset misses
@@ -130,8 +130,7 @@ class SuffixArraySpec extends SparkTestBase {
       assert(graft.operators.Curation.regenCorpus(a) eq ra)
       assert(!(graft.operators.Curation.regenCorpus(b) eq ra))
       // in-memory frames stay uncacheable for the fit caches
-      assert(graft.operators.Similarity
-        .fitCacheKey(Seq((1L, "x")).toDF("doc_id", "text")).isEmpty)
+      assert(PlanCache.planKey(Seq((1L, "x")).toDF("doc_id", "text")).isEmpty)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d1))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d2))

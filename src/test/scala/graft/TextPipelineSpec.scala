@@ -121,8 +121,8 @@ class TextPipelineSpec extends SparkTestBase {
     // a subsequent recompute-path call must release the persisted frame
     // (the lifecycle contract), and release is idempotent
     Curation.funnel(Tables.documents(spark, sf), sw).collect()
-    Curation.release(spark)
-    Curation.release(spark)
+    graft.operators.PlanCache.releasePins(spark, Curation)
+    graft.operators.PlanCache.releasePins(spark, Curation)
   }
 
   test("piiRedact: real PII in text is scrubbed and counted alongside planted") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
@@ -20,29 +18,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warmup (not timed): scan every table at the benchmarked sf once so
-    // parquet-footer reads and codegen warm-up don't land on whichever
-    // query alphabetically touches a table first.
-    // via Tables loaders: a raw read of events.parquet would throw on its
-    // nanosecond timestamps and silently skip the most-used table
-    val loaders: Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Seq(Tables.events, Tables.lineitem, Tables.orders, Tables.customer,
-        Tables.supplier, Tables.part, Tables.nation, Tables.region,
-        Tables.documents, Tables.embeddings)
-    for (load <- loaders)
-      try load(spark, sfDir).count()
-      catch { case _: Throwable => }
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    // optional arg: comma-separated query subset (local iteration only —
+    // recorded artifacts always come from full runs)
+    val queries = Harness.select(args.headOption)
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
 
     // Three passes, per-query MIN over SUCCESSFUL passes: this host shows
     // multi-second run-to-run noise (one observed run was +40% on every
@@ -50,29 +30,14 @@ object Bench {
     // co-tenant moment. A failed pass contributes NO time (a crash's
     // time-to-failure must never be selected as a fast run); a query that
     // failed in every pass reports -1 so the breakage is visible.
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
+    def runOne(fn: Harness.Query): Option[Double] =
+      Harness.run(spark) {
+        val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.count()
-        Some((System.nanoTime() - t0) / 1e9)
-      }
-      catch { case _: Throwable => None }
-      // ranking queries pin range-partitioned frames until released; a
-      // 3-pass bench would otherwise accumulate them for the process life
-      // (the dist-matched sampler's pinned projection likewise)
-      finally {
-        graft.operators.DistributedRank.release(spark)
-        graft.operators.Mixture.releaseDistMatched(spark)
-      }
-    }
-    // optional arg: comma-separated query subset (local iteration only —
-    // recorded artifacts always come from full runs)
-    val subset: Option[Set[String]] =
-      args.headOption.map(_.split(",").toSet)
+        (System.nanoTime() - t0) / 1e9
+      }.toOption
     def onePass(): Seq[(String, Option[Double])] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => subset.forall(_.contains(name)) }
-        .map { case (name, fn) => name -> runOne(fn) }
+      queries.map { case (name, fn) => name -> runOne(fn) }
 
     // Noise floor: three fixed sentinel queries (scan-bound, shuffle-bound,
     // sketch-bound) timed once right after warmup and once after the last
@@ -123,7 +88,7 @@ object Bench {
     def r3(v: Double): String = if (v < 0) "-1" else num(v, 3)
 
     // The harness that records this run keeps only the LAST ~2000 chars of
-    // stdout; a per-query map over the full suite (~150 queries, ~6 KB) was
+    // stdout; a per-query map over the full suite (376 queries, ~10 KB) was
     // overflowing that window, so the machine-readable line was never parsed
     // (BENCH_r01..r07 all carry "parsed": null). The headline line printed
     // LAST is therefore compact: total + failure count + a fixed

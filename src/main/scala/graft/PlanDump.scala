@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for named
   * registry queries to files (plans/rNN/<query>_{before,after}.txt — the
   * judge checks plan claims against these). Not part of the driver
-  * contract; session config mirrors Bench so the dumped plan is the plan
-  * the bench times.
+  * contract; it builds Bench's session ([[Harness.session]]) so the
+  * dumped plan is the plan the bench times.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
   * Writes <outDir>/<name>_<suffix>.txt per query (all queries if no list).
@@ -17,33 +16,15 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val subset: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = Harness.select(args.lift(3))
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => subset.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        } finally {
-          graft.operators.DistributedRank.release(spark)
-          graft.operators.Mixture.releaseDistMatched(spark)
-        }
-      }
+    for ((name, fn) <- queries)
+      Harness.run(spark) {
+        val txt = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
+      }.left.foreach(e => System.err.println(s"[plandump] $name failed: ${e.getMessage}"))
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -15,17 +14,13 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (args.length < 2) {
+      System.err.println("usage: runMain graft.Profile <sfDir> <q1,q2,...>")
+      sys.exit(2)
+    }
+    val sfDir = args(0)
+    val queries = Harness.select(Some(args(1)))
+    val spark = Harness.session()
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
@@ -47,21 +42,14 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // warmup identical to Bench
-    val loaders: Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Seq(Tables.events, Tables.lineitem, Tables.orders, Tables.customer,
-        Tables.supplier, Tables.part, Tables.nation, Tables.region,
-        Tables.documents, Tables.embeddings)
-    for (load <- loaders)
-      try load(spark, sfDir).count()
-      catch { case _: Throwable => }
+    Harness.warmup(spark, sfDir)
 
     println(f"${"query"}%-32s ${"build_s"}%8s ${"act_s"}%8s jobs stages tasks tasktime_s shufMB")
-    for (name <- names; fn = SparkEntry.queries(name)) {
+    for ((name, fn) <- queries) {
       // run twice; the warm (second) run is what the bench's min-of-3
       // reports; the cold (first) run carries any session-cache build —
       // the cold/warm split the roundlog records per cached family
-      for (round <- 0 to 1) {
+      for (round <- 0 to 1) Harness.run(spark) {
         jobs.set(0); stages.set(0); tasks.set(0)
         taskTimeMs.set(0); shufR.set(0); shufW.set(0)
         val t0 = System.nanoTime()
@@ -72,9 +60,7 @@ object Profile {
         Thread.sleep(300) // let queued listener events drain
         val tag = if (round == 0) " [cold]" else ""
         println(f"$name%-32s ${(t1 - t0) / 1e9}%8.2f ${(t2 - t1) / 1e9}%8.2f ${jobs.get}%4d ${stages.get}%6d ${tasks.get}%5d ${taskTimeMs.get / 1e3}%10.2f ${(shufR.get + shufW.get) / 1e6}%6.1f$tag")
-        graft.operators.DistributedRank.release(spark)
-        graft.operators.Mixture.releaseDistMatched(spark)
-      }
+      }.left.foreach(e => System.err.println(s"[profile] $name failed: ${e.getMessage}"))
     }
     spark.stop()
   }

@@ -3,7 +3,7 @@ package graft
 import graft.gen.{DocGen, EventGen}
 import graft.operators.{Dedup, DistributedRank, Hll, HourlyAggregation, Mixture,
   Sessionize, Similarity, Upsert}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable.ArrayBuffer
@@ -29,14 +29,7 @@ object ScaleSmoke {
   private val firstRunOnly = Set("dedup_clusters", "ann_ivf", "minhash_lsh_pairs")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     // (op, scale) -> (t1, t2, rows)
     val results = ArrayBuffer[(String, Int, Double, Double, Long)]()
@@ -57,10 +50,12 @@ object ScaleSmoke {
 
     def time(tag: String, scale: Int)(f: => Long): Unit = {
       if (!onlyOps.forall(_.contains(tag))) return
-      def once(): (Double, Long) = {
+      // each run releases its pins outside the timer: a ranking op's
+      // second run would otherwise read the first run's pinned frame
+      def once(): (Double, Long) = Harness.run(spark) {
         val t0 = System.nanoTime(); val n = f
         ((System.nanoTime() - t0) / 1e9, n)
-      }
+      }.toTry.get
       val (t1, n) = once(); val (t2, _) = once()
       results += ((tag, scale, t1, t2, n))
       println(f"SCALE $scale%3d  $tag%-24s t1=$t1%7.2f s  t2=$t2%7.2f s  rows=$n")
@@ -145,7 +140,6 @@ object ScaleSmoke {
       // RFM: three range-partitioned rankings of the per-customer frame
       time("rfm_segments", scale)(
         graft.queries.Analytics.rfmSegments(pseudoOrders).count())
-      DistributedRank.release(spark)
       // round-9 additions over the event/order slices:
       // column_stats (post-Expand-removal: counters pass + per-column
       // single-distinct branches — the curve must be scan-bound)
@@ -243,11 +237,8 @@ object ScaleSmoke {
         graft.operators.Eval.brierDecomposition(ev).count())
       time("watermark_lateness", scale)(
         graft.operators.Lateness.watermarkLateness(ev).count())
-      time("range_partition_plan", scale) {
-        val n = force(graft.operators.Layout.rangePartitionPlan(
-          pseudoOrders))
-        DistributedRank.release(spark); n
-      }
+      time("range_partition_plan", scale)(
+        force(graft.operators.Layout.rangePartitionPlan(pseudoOrders)))
       time("croston_forecast", scale)(
         graft.operators.Changepoint.crostonForecast(ev.select(
           pmod(col("event_id") * 2654435761L,
@@ -328,7 +319,6 @@ object ScaleSmoke {
         graft.operators.GroupTests.brownForsythe(ev).count())
       time("jonckheere_terpstra", scale)(
         graft.operators.GroupTests.jonckheereTerpstra(ev).count())
-      DistributedRank.release(spark)
       ev.unpersist()
 
       val docs = DocGen.documents(spark, nDocs).cache()
@@ -363,12 +353,9 @@ object ScaleSmoke {
       // per-source exact quantile gate: shuffle on source + the
       // DistributedRank global rank (range partition, no single-partition
       // window); curve should track the corpus sort
-      time("per_source_quality_gate", scale) {
-        val n = force(graft.operators.Curation.perSourceQualityGate(
-          docs, Seq("the", "a", "of", "and")))
-        DistributedRank.release(spark)
-        n
-      }
+      time("per_source_quality_gate", scale)(
+        force(graft.operators.Curation.perSourceQualityGate(
+          docs, Seq("the", "a", "of", "and"))))
       time("cross_doc_ngrams", scale)(
         Dedup.crossDocNgramOverlap(docs).count())
       time("doc_perplexity", scale)(
@@ -468,26 +455,18 @@ object ScaleSmoke {
       // (yhat, doc_id) + a 10-row rollup — the curve should track the
       // feature build like quality_classifier, with the rank's range
       // shuffle on top (never a single-partition window)
-      time("quality_classifier_calib", scale) {
-        val n = force(graft.operators.QualityClassifier.calibration(docs))
-        DistributedRank.release(spark); n
-      }
+      time("quality_classifier_calib", scale)(
+        force(graft.operators.QualityClassifier.calibration(docs)))
       // distribution-matched resample: two tiny histograms + ONE
       // DistributedRank range shuffle over the (bucket, pri, doc_id)
       // total order — per-bucket rank via offsets, so the curve must not
       // show an 8-reduce-task straggler at any scale
-      time("dist_matched_sample", scale) {
-        val n = force(graft.operators.Mixture.distMatchedSample(docs))
-        DistributedRank.release(spark)
-        graft.operators.Mixture.releaseDistMatched(spark); n
-      }
+      time("dist_matched_sample", scale)(
+        force(graft.operators.Mixture.distMatchedSample(docs)))
       // token-mass twin: the running-sum gate rides the distributed
       // prefix sum (range partition + offsets) — same flat shape expected
-      time("dist_matched_token", scale) {
-        val n = force(graft.operators.Mixture.distMatchedTokenSample(docs))
-        DistributedRank.release(spark)
-        graft.operators.Mixture.releaseDistMatched(spark); n
-      }
+      time("dist_matched_token", scale)(
+        force(graft.operators.Mixture.distMatchedTokenSample(docs)))
       // retrieval additions: BM25 is two stateless scan passes (stats
       // 1-row broadcast + scoring top-k) — the curve should be pure scan;
       // PMI is the bigram explode into a vocab²-bounded aggregate, so its
@@ -508,7 +487,6 @@ object ScaleSmoke {
       // the curve must have no single-task sort step
       time("conformal_intervals", scale)(
         graft.operators.Experiment.conformalIntervals(docs).count())
-      DistributedRank.release(spark)
       // round-9: PRF — BM25 select (two scan passes) + k-doc-bounded
       // feedback aggregate + corpus df; curve should track bm25_top_docs
       time("prf_expansion", scale)(
@@ -516,7 +494,6 @@ object ScaleSmoke {
       // round-9 late: first-occurrence vocab curve + Zipf-tail profile
       time("vocab_growth", scale)(
         graft.functions.TextAnalysis.vocabGrowth(docs).count())
-      DistributedRank.release(spark)
       // round-10 text additions: RAKE phrase islands (per-doc windows),
       // Good-Turing trigram count-of-counts, G² four-term cells,
       // readability regex folds — all scan-shaped

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,33 +6,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name subset (local iteration)
-    val subset: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = Harness.select(args.lift(2))
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => subset.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // ranking queries pin ranged frames until released (see
-      // DistributedRank cache lifecycle); the dist-matched sampler pins
-      // its tokenize+hash projection the same way
-      finally {
-        graft.operators.DistributedRank.release(spark)
-        graft.operators.Mixture.releaseDistMatched(spark)
-      }
-    }
+    for ((name, fn) <- queries)
+      Harness.run(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
+        .left.foreach(e => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -48,8 +27,9 @@ object Verify {
     } + "\""
     // oracleSqlFor: the ANN pins are selected for THIS sfDir's tables, not
     // whatever ANN fit happened to run last in the JVM.
+    val names = queries.map(_._1).toSet
     val json = SparkEntry.oracleSqlFor(spark, sfDir)
-      .filter { case (k, _) => subset.forall(_.contains(k)) }
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

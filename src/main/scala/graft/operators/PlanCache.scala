@@ -174,6 +174,21 @@ private[graft] object PlanCache {
     if (held != null) held.foreach(_.unpersist(blocking = false))
   }
 
+  /** Release what one query leaves pinned; runners call it after every
+    * query. Only two owners are per-query. [[DistributedRank]] pins each
+    * ranged frame beside the earlier ones ([[addPins]]), so a run of
+    * queries would otherwise hold every ranged frame it built. [[Mixture]]'s
+    * dist-matched base is replaced only by the next dist-matched call, so
+    * it would otherwise stay persisted through every later query. Every
+    * other owner replaces its pin on its own next call, which bounds it to
+    * one set of frames; releasing those too would change what the bench
+    * measures.
+    */
+  def releasePerQuery(spark: SparkSession): Unit = {
+    releasePins(spark, DistributedRank)
+    releasePins(spark, Mixture)
+  }
+
   /** The frames `owner` currently holds in `spark`. */
   def pinnedFrames(spark: SparkSession, owner: AnyRef): List[DataFrame] =
     pins.getOrDefault((spark, owner), Nil)

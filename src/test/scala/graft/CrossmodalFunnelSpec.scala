@@ -131,19 +131,28 @@ class CrossmodalFunnelSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf)
     val first = Multimodal.crossmodalDedupFunnel(spark, docs)
       .collect().map(r => (r.getInt(0), r.getLong(2))).toSeq
-    // a second call releases the first call's frame and pins its own;
-    // results must be byte-identical either way
+    // a second call reads the same fingerprint checkpoint; results must
+    // be byte-identical either way
     val second = Multimodal.crossmodalDedupFunnel(spark, docs)
       .collect().map(r => (r.getInt(0), r.getLong(2))).toSeq
     assert(second == first)
-    val pinned = spark.sparkContext.getPersistentRDDs.size
-    assert(pinned > 0)
+    // the funnel reads the PlanCache checkpoint and pins nothing of its
+    // own; imageNearDups pins its fingerprints through persistFingerprints
+    Multimodal.imageNearDups(spark, docs).count()
+    val pinned = graft.operators.PlanCache.pinnedFrames(spark, Multimodal)
+    assert(pinned.nonEmpty)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val ids = pinned.flatMap(df => cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id)).toSet
+    assert(ids.size == pinned.size)
     graft.operators.PlanCache.releasePins(spark, Multimodal)
     // unpersist is async (blocking = false): poll briefly for the drop
+    def live = spark.sparkContext.getPersistentRDDs.keySet.intersect(ids)
     val deadline = System.nanoTime + 10_000_000_000L
-    while (spark.sparkContext.getPersistentRDDs.size >= pinned &&
-           System.nanoTime < deadline) Thread.sleep(50)
-    assert(spark.sparkContext.getPersistentRDDs.size < pinned)
+    while (live.nonEmpty && System.nanoTime < deadline) Thread.sleep(50)
+    assert(live.isEmpty)
   }
 
   test("incremental stream prefix == batch form of the same stages") {

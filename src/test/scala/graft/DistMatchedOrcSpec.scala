@@ -162,8 +162,7 @@ class DistMatchedOrcSpec extends SparkTestBase {
         .filter(col("mx") =!= col("st")).count()
       assert(cumOk == 0L)
     } finally {
-      out.unpersist(); DistributedRank.release(spark)
-      Mixture.releaseDistMatched(spark)
+      out.unpersist(); PlanCache.releasePerQuery(spark)
     }
   }
 

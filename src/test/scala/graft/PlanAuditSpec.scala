@@ -860,10 +860,7 @@ class PlanAuditSpec extends SparkTestBase {
       val docScans = deepLeaves(plan).map(_.toString)
         .count(p => p.contains("documents") && !p.contains("InMemory"))
       assert(docScans == 0, s"expected zero raw documents scans:\n$s")
-    } finally {
-      graft.operators.DistributedRank.release(spark)
-      graft.operators.Mixture.releaseDistMatched(spark)
-    }
+    } finally graft.operators.PlanCache.releasePerQuery(spark)
   }
 
   test("dist_matched_token_sample: range-partitioned cumsum, broadcast probe, one corpus pass") {
@@ -888,10 +885,7 @@ class PlanAuditSpec extends SparkTestBase {
       val docScans = deepLeaves(plan).map(_.toString)
         .count(p => p.contains("documents") && !p.contains("InMemory"))
       assert(docScans == 0, s"expected zero raw documents scans:\n$s")
-    } finally {
-      graft.operators.DistributedRank.release(spark)
-      graft.operators.Mixture.releaseDistMatched(spark)
-    }
+    } finally graft.operators.PlanCache.releasePerQuery(spark)
   }
 
   test("per_source_quality_gate: one scan, range-partitioned rank, no 1-task window") {

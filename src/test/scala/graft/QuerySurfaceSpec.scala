@@ -17,7 +17,7 @@ class QuerySurfaceSpec extends SparkTestBase {
         if (c1 != c2) failures += s"$name: non-deterministic count ($c1 vs $c2)"
       } catch {
         case e: Throwable => failures += s"$name: ${e.getClass.getSimpleName} ${e.getMessage}"
-      } finally graft.operators.DistributedRank.release(spark)
+      } finally graft.operators.PlanCache.releasePerQuery(spark)
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

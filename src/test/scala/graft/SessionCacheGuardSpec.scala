@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `operators/PlanCache.scala` only. A `ConcurrentHashMap[SparkSession, …]`
   * or a `mutable.Map` holding DataFrames anywhere else under
   * `src/main/scala` is a hand-rolled copy of one of them and fails here.
+  * Likewise `SparkSession.builder` is called only in `Harness.scala`.
   */
 class SessionCacheGuardSpec extends AnyFunSuite {
   import SessionCacheGuardSpec._
@@ -44,6 +45,19 @@ class SessionCacheGuardSpec extends AnyFunSuite {
       "session cache outside operators/PlanCache.scala (use PlanCache, FitMemo " +
         s"or the PlanCache pin registry): ${found.mkString(", ")}")
   }
+
+  test("only Harness.scala builds a SparkSession") {
+    assert(buildsSession("val s = SparkSession.builder()\n  .getOrCreate()"))
+    assert(!buildsSession("/** SparkSession.builder() */ // SparkSession.builder\n" +
+      "val q = \"//\"; val c = '\"'"))
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+      .filterNot(_.getName == "Harness.scala")
+    assert(files.size > 50, s"scanned only ${files.size} files")
+    val found = files.filter(f =>
+      buildsSession(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
+    assert(found.isEmpty,
+      s"SparkSession.builder outside Harness.scala (use Harness.session()): ${found.mkString(", ")}")
+  }
 }
 
 object SessionCacheGuardSpec {
@@ -52,6 +66,18 @@ object SessionCacheGuardSpec {
   private val mutableMap =
     """mutable\s*\.\s*(?:Map|HashMap)\s*(?:\.\s*empty\s*)?\[""".r
   private val valName = """\bva[lr]\s+(\w+)""".r
+
+  /** String and char literals (kept) or comments (dropped). */
+  private val literalOrComment =
+    """(?s)("{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])')|//[^\n]*|/\*.*?\*/""".r
+  private val builderCall = """SparkSession\s*\.\s*builder\b""".r
+
+  /** `text` calls `SparkSession.builder` outside comments. */
+  def buildsSession(text: String): Boolean = {
+    val code = literalOrComment.replaceAllIn(text,
+      m => scala.util.matching.Regex.quoteReplacement(Option(m.group(1)).getOrElse(" ")))
+    builderCall.findFirstIn(code).isDefined
+  }
 
   def scalaFiles(dir: java.io.File): Seq[java.io.File] =
     Option(dir.listFiles).toSeq.flatten.flatMap { f =>

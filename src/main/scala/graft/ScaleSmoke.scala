@@ -141,8 +141,8 @@ object ScaleSmoke {
       time("rfm_segments", scale)(
         graft.queries.Analytics.rfmSegments(pseudoOrders).count())
       // round-9 additions over the event/order slices:
-      // column_stats (post-Expand-removal: counters pass + per-column
-      // single-distinct branches — the curve must be scan-bound)
+      // column_stats (counters pass + one stacked distinct pass per
+      // table — the curve must be scan-bound)
       time("column_stats", scale)(
         graft.operators.TableStats.columnStats(
           pseudoOrders.withColumn("o_orderstatus",

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Upsert
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -527,9 +528,16 @@ object StreamingAgg {
     // the target URI, so the crash-safe swap works identically on local fs,
     // HDFS (atomic rename), and object stores (S3A rename is copy+delete —
     // slower but still leaves either target or _old readable at every step).
-    import org.apache.hadoop.fs.Path
+    upsertBatch(spark, batch, targetDir, batchId,
+      new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  /** [[upsertBatch]] with the swap's renames and deletes going through `fs`
+    * (a spec injects a filesystem that fails on cue).
+    */
+  private[graft] def upsertBatch(spark: SparkSession, batch: DataFrame,
+      targetDir: String, batchId: Long, fs: FileSystem): Unit = {
     val target = new Path(targetDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new Path(targetDir + "_old")
     // Crash recovery: a previous swap may have died between the two renames,
     // leaving the accumulated table at _old and no target.
@@ -552,17 +560,29 @@ object StreamingAgg {
     // bounded (one small file per swap); a row-volume-bounded table would
     // drop it and partition the target instead.
     merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    // Swap keeps the prior state on disk until the new one is in place:
-    // target -> _old, _tmp -> target, then drop _old. A crash at any point
-    // leaves either target or _old readable — never silent loss.
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"upsertBatch: could not delete $old")
-    if (fs.exists(target) && !fs.rename(target, old))
-      throw new java.io.IOException(s"upsertBatch: failed to stage $targetDir aside")
+    swapIn(fs, tmp, target, old, batchId)
+  }
+
+  /** Publish `tmp` as `target`, keeping the prior state on disk until the
+    * new one is in place: target -> old, tmp -> target, then drop old. A
+    * crash at any point leaves target or old readable — never silent loss.
+    * When target is missing, old holds the only accumulated state (a
+    * previous swap died between its renames), so it is dropped only after
+    * tmp is published; when target exists, old is stale and goes first.
+    */
+  private def swapIn(fs: FileSystem, tmp: Path, target: Path, old: Path,
+      batchId: Long): Unit = {
+    def drop(p: Path): Unit =
+      if (fs.exists(p) && !fs.delete(p, true))
+        throw new java.io.IOException(s"upsertBatch: could not delete $p")
+    if (fs.exists(target)) {
+      drop(old)
+      if (!fs.rename(target, old))
+        throw new java.io.IOException(s"upsertBatch: failed to stage $target aside")
+    }
     if (!fs.rename(tmp, target))
       throw new java.io.IOException(
-        s"upsertBatch: failed to publish batch $batchId to $targetDir")
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"upsertBatch: could not delete $old")
+        s"upsertBatch: failed to publish batch $batchId to $target")
+    drop(old)
   }
 }

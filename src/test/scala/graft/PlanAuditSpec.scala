@@ -537,6 +537,22 @@ class PlanAuditSpec extends SparkTestBase {
       s"the profile must not fan rows through a multi-distinct Expand:\n$p")
   }
 
+  test("columnStats: at most two parquet scans per table, whatever its width") {
+    val q = graft.operators.TableStats.columnStats(
+      Tables.orders(spark, sf), Tables.events(spark, sf))
+    // counters pass + stacked distinct pass; a distinct branch per column
+    // would scan the table once per column on top of the counters pass
+    val scans = deepLeaves(finalPlan(q)).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.metadata("Location")
+    }
+    for (t <- Seq("orders", "events")) {
+      val n = scans.count(_.contains(s"$t.parquet"))
+      assert(n >= 1 && n <= 2,
+        s"$t is scanned $n times, expected at most 2:\n${scans.mkString("\n")}")
+    }
+  }
+
   test("assocRules: marginals broadcast; single generator per basket row") {
     val q = graft.operators.Association.assocRules(Tables.lineitem(spark, sf))
     val p = executed(q)

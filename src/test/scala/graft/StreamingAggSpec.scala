@@ -672,6 +672,43 @@ class StreamingAggSpec extends SparkTestBase {
     assert(result.select("event_count").as[Long].head == 2L)
   }
 
+  test("upsertBatch recovery: a publish that fails keeps _old until the next call merges it") {
+    import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+    /** Fails the first rename into `into`, as a crash between the swap's
+      * steps would leave it.
+      */
+    class FailPublishOnce(fs: FileSystem, into: Path) extends FilterFileSystem(fs) {
+      var failed = false
+      override def rename(src: Path, dst: Path): Boolean =
+        if (!failed && dst == into) { failed = true; false }
+        else super.rename(src, dst)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_recovery").toFile
+    val target = new java.io.File(dir, "agg").getAbsolutePath
+    val (targetP, oldP) = (new Path(target), new Path(target + "_old"))
+    val fs = targetP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def served(): Set[String] = Seq(targetP, oldP).find(fs.exists)
+      .map(p => spark.read.parquet(p.toString).select("event_type").as[String]
+        .collect().toSet)
+      .getOrElse(Set.empty)
+    def hour(id: Long, t: String, typ: String) =
+      HourlyAggregation(Seq(ev(id, t, 1, typ, 1.0)).toDF())
+    // recovery layout: a previous swap died between its renames, so the
+    // accumulated table S sits at _old and there is no target
+    StreamingAgg.upsertBatch(spark, hour(1, "2024-01-01 10:05:00", "click"),
+      target, batchId = 0)
+    assert(fs.rename(targetP, oldP) && !fs.exists(targetP))
+    val failing = new FailPublishOnce(fs, targetP)
+    intercept[java.io.IOException](StreamingAgg.upsertBatch(spark,
+      hour(2, "2024-01-01 11:05:00", "view"), target, 1, failing))
+    assert(failing.failed)
+    assert(served() == Set("click"), "S must stay readable after the failed call")
+    StreamingAgg.upsertBatch(spark, hour(3, "2024-01-01 12:05:00", "buy"),
+      target, batchId = 2)
+    assert(fs.exists(targetP) && !fs.exists(oldP))
+    assert(served() == Set("click", "buy"), "the next call must merge S")
+  }
+
   test("stateful streaming transitions match the batch lead() operator across batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Timestamp, String)]

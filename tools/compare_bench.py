@@ -4,6 +4,9 @@
 Usage: compare_bench.py <bench_detail.json> [baseline.json]
 Prints geomean ratio over shared keys, worst ratios, and the sentinel
 noise floor (tpch_q1_pricing / hourly_agg / minhash_lsh_pairs).
+Bench reports -1 for a query that failed in every pass; every shared query
+that is -1 now but positive in the baseline is listed, and the exit status
+is 1 when there is one.
 """
 import json
 import math
@@ -23,9 +26,10 @@ if not ratios:
     sys.exit(f"no shared keys with positive times ({len(shared)} shared)")
 gm = math.exp(sum(math.log(r) for r in ratios.values()) / len(ratios))
 print(f"shared keys: {len(shared)}  geomean ratio: {gm:.3f}x")
-print(f"total now: {sum(qs.values()):.1f}s over {len(qs)} queries; "
-      f"baseline total over shared: {sum(bq[k] for k in shared):.1f}s "
-      f"vs now {sum(qs[k] for k in shared):.1f}s")
+print(f"total now: {sum(v for v in qs.values() if v > 0):.1f}s over "
+      f"{sum(1 for v in qs.values() if v > 0)} passing queries; "
+      f"baseline total over shared passing: {sum(bq[k] for k in ratios):.1f}s "
+      f"vs now {sum(qs[k] for k in ratios):.1f}s")
 over = {k: r for k, r in ratios.items() if r > 1.5}
 print(f"queries over 1.5x: {len(over)}")
 for k, r in sorted(ratios.items(), key=lambda kv: -kv[1])[:12]:
@@ -37,3 +41,9 @@ print("sentinels:", {s: round(ratios[s], 2) for s in sent if s in ratios},
       if drift else "")
 new = sorted(set(qs) - set(bq))
 print(f"new (not in baseline): {len(new)}")
+broken = [k for k in shared if qs[k] < 0 and bq[k] > 0]
+print(f"failed now, passing in baseline: {len(broken)}")
+for k in broken:
+    print(f"  FAILED  {k} (baseline {bq[k]:.3f}s)")
+if broken:
+    sys.exit(1)

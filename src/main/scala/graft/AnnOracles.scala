@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Machine-generated DuckDB oracle SQL for the seeded ANN index fits —
   * the "golden-centroid pin": after a Verify run, the fitted IVF
@@ -449,6 +450,36 @@ FROM rer QUALIFY rnk <= $k
 ORDER BY query_id, rnk"""
   }
 
+  /** One ANN query's pin: its fit for a given embeddings frame under the
+    * SparkEntry default parameters, the JVM's sole fit of that index type,
+    * and the SQL that pins a fit.
+    */
+  private final case class Pin[F](name: String, fitFor: DataFrame => Option[F],
+      soleFit: () => Option[F], sql: F => String) {
+    def forFrame(emb: DataFrame): Option[(String, String)] =
+      fitFor(emb).map(f => name -> sql(f))
+    def ifSole: Option[(String, String)] = soleFit().map(f => name -> sql(f))
+  }
+
+  private val pins: Seq[Pin[_]] = Seq(
+    Pin("ann_ivf", Similarity.ivfFitFor(_), () => Similarity.soleIvfFit, ivfSql),
+    Pin("ann_ivf_append", Similarity.ivfAppendFitFor(_),
+      () => Similarity.soleIvfAppendFit, ivfAppendSql),
+    Pin("ann_pq", Similarity.pqFitFor(_), () => Similarity.solePqFit, pqSql),
+    Pin("ann_ivfpq", Similarity.ivfPqFitFor(_), () => Similarity.soleIvfPqFit,
+      ivfPqSql),
+    Pin("ann_ivfpq_append", Similarity.ivfPqAppendFitFor(_),
+      () => Similarity.soleIvfPqAppendFit, ivfPqAppendSql),
+    Pin("semantic_dedup", Similarity.semFitFor(_), () => Similarity.soleSemFit,
+      semSql),
+    Pin("hybrid_dedup", Similarity.semFitFor(_), () => Similarity.soleSemFit,
+      hybridSql),
+    Pin("embedding_clusters", Similarity.caFitFor(_), () => Similarity.soleCaFit,
+      clusterSql))
+
+  /** The queries whose oracle exists only once their fit has run. */
+  val names: Seq[String] = pins.map(_.name)
+
   /** Oracle entries for THE dataset a Verify run exercised: looks up the
     * keyed fit registry under (that table's plan key, the SparkEntry
     * default parameters), so the emitted SQL always carries the verified
@@ -457,18 +488,9 @@ ORDER BY query_id, rnk"""
     * Empty before the queries have run — the driver then records the
     * documented rows-only fallback.
     */
-  def pinnedFor(spark: org.apache.spark.sql.SparkSession, sfDir: String): Map[String, String] = {
+  def pinnedFor(spark: SparkSession, sfDir: String): Map[String, String] = {
     val emb = Tables.embeddings(spark, sfDir)
-    Similarity.ivfFitFor(emb).map(f => "ann_ivf" -> ivfSql(f)).toMap ++
-      Similarity.ivfAppendFitFor(emb)
-        .map(f => "ann_ivf_append" -> ivfAppendSql(f)).toMap ++
-      Similarity.pqFitFor(emb).map(f => "ann_pq" -> pqSql(f)).toMap ++
-      Similarity.ivfPqFitFor(emb).map(f => "ann_ivfpq" -> ivfPqSql(f)).toMap ++
-      Similarity.ivfPqAppendFitFor(emb)
-        .map(f => "ann_ivfpq_append" -> ivfPqAppendSql(f)).toMap ++
-      Similarity.semFitFor(emb).map(f => "semantic_dedup" -> semSql(f)).toMap ++
-      Similarity.semFitFor(emb).map(f => "hybrid_dedup" -> hybridSql(f)).toMap ++
-      Similarity.caFitFor(emb).map(f => "embedding_clusters" -> clusterSql(f)).toMap
+    pins.flatMap(_.forFrame(emb)).toMap
   }
 
   /** Context-free fallback (the driver contract's parameterless
@@ -478,15 +500,5 @@ ORDER BY query_id, rnk"""
     * wrong model and failing spuriously. graft.Verify uses [[pinnedFor]],
     * so the driver flow always gets the precise entry.
     */
-  def pinned: Map[String, String] =
-    Similarity.soleIvfFit.map(f => "ann_ivf" -> ivfSql(f)).toMap ++
-      Similarity.soleIvfAppendFit
-        .map(f => "ann_ivf_append" -> ivfAppendSql(f)).toMap ++
-      Similarity.solePqFit.map(f => "ann_pq" -> pqSql(f)).toMap ++
-      Similarity.soleIvfPqFit.map(f => "ann_ivfpq" -> ivfPqSql(f)).toMap ++
-      Similarity.soleIvfPqAppendFit
-        .map(f => "ann_ivfpq_append" -> ivfPqAppendSql(f)).toMap ++
-      Similarity.soleSemFit.map(f => "semantic_dedup" -> semSql(f)).toMap ++
-      Similarity.soleSemFit.map(f => "hybrid_dedup" -> hybridSql(f)).toMap ++
-      Similarity.soleCaFit.map(f => "embedding_clusters" -> clusterSql(f)).toMap
+  def pinned: Map[String, String] = pins.flatMap(_.ifSole).toMap
 }

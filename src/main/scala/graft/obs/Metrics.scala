@@ -3,7 +3,6 @@ package graft.obs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
@@ -14,11 +13,7 @@ import scala.jdk.CollectionConverters._
   *
   *   - per-batch counters (events consumed by type, error counts) →
   *     `df.observe(...)` aggregates, collected by [[ObservedMetricsListener]]
-  *     (batch) / StreamingQueryProgress.observedMetrics (streaming);
-  *   - throughput / latency histograms → StreamingQueryProgress.durationMs
-  *     and sources.metrics, surfaced by [[ProgressListener]];
-  *   - consumer lag (S5) → the Kafka source's per-partition lag in
-  *     progress.sources.metrics, same listener.
+  *     (batch) / StreamingQueryProgress.observedMetrics (streaming).
   */
 object Metrics {
 
@@ -48,31 +43,6 @@ object Metrics {
   def registerBatchListener(spark: SparkSession): ObservedMetricsListener = {
     val l = new ObservedMetricsListener
     spark.listenerManager.register(l)
-    l
-  }
-
-  /** Streaming progress collector: per-trigger rows/sec, batch duration,
-    * state rows, source metrics (incl. Kafka lag when that source is used).
-    */
-  class ProgressListener extends StreamingQueryListener {
-    private val buf = new ConcurrentLinkedQueue[Map[String, Any]]()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      buf.add(Map(
-        "batchId" -> p.batchId,
-        "numInputRows" -> p.numInputRows,
-        "processedRowsPerSecond" -> p.processedRowsPerSecond,
-        "durationMs" -> p.durationMs.asScala.toMap,
-        "stateRows" -> p.stateOperators.map(_.numRowsTotal).sum))
-    }
-    def collected: Seq[Map[String, Any]] = buf.asScala.toSeq
-  }
-
-  def registerStreamingListener(spark: SparkSession): ProgressListener = {
-    val l = new ProgressListener
-    spark.streams.addListener(l)
     l
   }
 }

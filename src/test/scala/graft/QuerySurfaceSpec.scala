@@ -28,6 +28,20 @@ class QuerySurfaceSpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("a query name given twice is rejected, not silently overwritten") {
+    val build: Harness.Query = (s, dir) => Tables.events(s, dir)
+    val e = intercept[IllegalArgumentException](QuerySpec.index(Seq(
+      new QuerySpec("hourly_agg", build, Some("SELECT 1")),
+      new QuerySpec("q4_event_types", build, Some("SELECT 2")),
+      new QuerySpec("hourly_agg", build, None))))
+    assert(e.getMessage.contains("duplicate query names: hourly_agg"), e.getMessage)
+  }
+
+  test("the queries without a static oracle are exactly the ANN pins") {
+    val pinnedOnly = SparkEntry.specs.filter(_.oracle.isEmpty).map(_.name)
+    assert(pinnedOnly.sorted == AnnOracles.names.sorted)
+  }
+
   test("after a full query run, EVERY query has an oracle (Verify dump order)") {
     // As of round 4 no query is rows-only: the pinned ANN oracles
     // materialize once the ANN queries have run, which is exactly Verify's

@@ -6,7 +6,8 @@ Usage: python3 tools/check_oracle.py /tmp/verify_out /root/testdata/sf0.01
 For each <name>/ parquet dir in the verify output, runs oracle_sql.json[name]
 in DuckDB (tables registered as views over the sf dir) and compares:
 column names (sorted), dtypes loosely, row count, and values cell-by-cell
-(exact for non-floats, tolerance 1e-9 relative for floats).
+(exact for non-floats, tolerance 1e-9 relative for floats). A result dir
+with no oracle entry fails, and so does a run that checks no query.
 """
 import sys, json, glob, os
 import duckdb
@@ -23,6 +24,10 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fail = 0
+for name in sorted(os.listdir(out_dir)):
+    if os.path.isdir(f"{out_dir}/{name}") and name not in oracle:
+        print(f"FAIL {name}: no oracle entry")
+        fail += 1
 for name, sql in sorted(oracle.items()):
     res_dir = f"{out_dir}/{name}"
     files = glob.glob(f"{res_dir}/*.parquet")
@@ -64,5 +69,9 @@ for name, sql in sorted(oracle.items()):
         fail += 1
     else:
         print(f"OK   {name}: {len(g)} rows x {len(g.columns)} cols")
+print(f"checked {len(oracle)} queries")
+if not oracle:
+    print("FAIL: no queries checked")
+    fail += 1
 print("RESULT:", "FAIL" if fail else "ALL OK")
 sys.exit(1 if fail else 0)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{FitPins, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Machine-generated DuckDB oracle SQL for the seeded ANN index fits —
@@ -451,31 +451,27 @@ ORDER BY query_id, rnk"""
   }
 
   /** One ANN query's pin: its fit for a given embeddings frame under the
-    * SparkEntry default parameters, the JVM's sole fit of that index type,
-    * and the SQL that pins a fit.
+    * SparkEntry default parameters, the registry of that index type (for
+    * its sole fit), and the SQL that pins a fit.
     */
   private final case class Pin[F](name: String, fitFor: DataFrame => Option[F],
-      soleFit: () => Option[F], sql: F => String) {
+      registry: FitPins[_, F], sql: F => String) {
     def forFrame(emb: DataFrame): Option[(String, String)] =
       fitFor(emb).map(f => name -> sql(f))
-    def ifSole: Option[(String, String)] = soleFit().map(f => name -> sql(f))
+    def ifSole: Option[(String, String)] = registry.sole.map(f => name -> sql(f))
   }
 
   private val pins: Seq[Pin[_]] = Seq(
-    Pin("ann_ivf", Similarity.ivfFitFor(_), () => Similarity.soleIvfFit, ivfSql),
-    Pin("ann_ivf_append", Similarity.ivfAppendFitFor(_),
-      () => Similarity.soleIvfAppendFit, ivfAppendSql),
-    Pin("ann_pq", Similarity.pqFitFor(_), () => Similarity.solePqFit, pqSql),
-    Pin("ann_ivfpq", Similarity.ivfPqFitFor(_), () => Similarity.soleIvfPqFit,
-      ivfPqSql),
+    Pin("ann_ivf", Similarity.ivfFitFor(_), Similarity.ivfPins, ivfSql),
+    Pin("ann_ivf_append", Similarity.ivfAppendFitFor(_), Similarity.ivfAppendPins,
+      ivfAppendSql),
+    Pin("ann_pq", Similarity.pqFitFor(_), Similarity.pqPins, pqSql),
+    Pin("ann_ivfpq", Similarity.ivfPqFitFor(_), Similarity.ivfPqPins, ivfPqSql),
     Pin("ann_ivfpq_append", Similarity.ivfPqAppendFitFor(_),
-      () => Similarity.soleIvfPqAppendFit, ivfPqAppendSql),
-    Pin("semantic_dedup", Similarity.semFitFor(_), () => Similarity.soleSemFit,
-      semSql),
-    Pin("hybrid_dedup", Similarity.semFitFor(_), () => Similarity.soleSemFit,
-      hybridSql),
-    Pin("embedding_clusters", Similarity.caFitFor(_), () => Similarity.soleCaFit,
-      clusterSql))
+      Similarity.ivfPqAppendPins, ivfPqAppendSql),
+    Pin("semantic_dedup", Similarity.semFitFor(_), Similarity.semPins, semSql),
+    Pin("hybrid_dedup", Similarity.semFitFor(_), Similarity.semPins, hybridSql),
+    Pin("embedding_clusters", Similarity.caFitFor(_), Similarity.caPins, clusterSql))
 
   /** The queries whose oracle exists only once their fit has run. */
   val names: Seq[String] = pins.map(_.name)

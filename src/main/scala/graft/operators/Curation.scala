@@ -242,12 +242,8 @@ object Curation {
     // AQE's per-stage job materialization triples the job count on these
     // model-sized round frames (gains = one row per doc with a live
     // trigram, deltas smaller) for zero adaptive benefit — the joins are
-    // explicitly broadcast-hinted. Scoped off for the greedy loop,
-    // restored in finally.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = spark.conf.get(aqeKey, "true")
-    spark.conf.set(aqeKey, "false")
-    try {
+    // explicitly broadcast-hinted. Scoped off for the greedy loop.
+    PlanCache.withoutAqe(spark) {
     var gains = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("gain"))
       .localCheckpoint()
     var covered: DataFrame = null
@@ -284,7 +280,7 @@ object Curation {
       }
       r += 1
     }
-    } finally spark.conf.set(aqeKey, aqePrev)
+    }
     val cum = picks.scanLeft(0L)(_ + _._3).tail
     import spark.implicits._
     picks.toSeq.zip(cum)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference engine's heart: hourly tumbling-window aggregation.
@@ -31,11 +31,19 @@ object HourlyAggregation {
     * order-independent for the correctness oracle.
     */
   def apply(events: DataFrame): DataFrame =
+    byHour(events, countDistinct(col("user_id")))
+
+  /** The grouping, measures and projection of [[apply]], with the
+    * distinct-user aggregate as the one part that varies: batch counts
+    * with `countDistinct`, the streaming form
+    * ([[graft.streaming.StreamingAgg]]) with its exact-distinct UDAF.
+    */
+  private[graft] def byHour(events: DataFrame, uniqueUsers: Column): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(
         count(lit(1)).as("event_count"),
-        countDistinct(col("user_id")).as("unique_user_count"),
+        uniqueUsers.as("unique_user_count"),
         round(sum(col("value")), 2).as("total_value"),
         // avg derived as round(sum,2)/count rather than avg()+round: the
         // operands are bit-identical across engines (a sum of 2-decimal

@@ -90,9 +90,50 @@ private[graft] final class FitMemo[P, V](bound: Int) {
     }
 }
 
+/** Fits an operator records for a later reader, keyed by (dataset, call
+  * parameters): the ANN family's centroids and codebooks, which
+  * [[graft.AnnOracles]] pins as literals in its DuckDB SQL after a Verify
+  * run. Not last-write-wins: a run over several datasets or parameter
+  * sets records one entry per distinct call, and [[get]] returns the fit
+  * of exactly the call asked about, so a stale fit from another ANN call
+  * can never stand in for the verified run's model.
+  *
+  * Unlike [[FitMemo]] this is a record, not a cache, so LocalRelation
+  * inputs are kept too, keyed by schema only (their rows are invisible to
+  * plan canonicalization, the caveat of [[PlanCache.planKey]]): two
+  * same-schema in-memory frames share an entry and the last record wins.
+  * Bounded by a wholesale clear once more than 16 entries are held.
+  */
+private[graft] final class FitPins[P, F] {
+  private val pins = new ConcurrentHashMap[(String, P), F]()
+
+  private def key(data: DataFrame, params: P): (String, P) =
+    (PlanCache.planKey(data).map(_.productIterator.mkString("\n"))
+      .getOrElse("<local:" + data.schema.simpleString + ">"), params)
+
+  def record(data: DataFrame, params: P, fit: F): Unit = {
+    if (pins.size > 16) pins.clear()
+    pins.put(key(data, params), fit): Unit
+  }
+
+  /** The fit recorded for exactly this (dataset, params) call, if it ran. */
+  def get(data: DataFrame, params: P): Option[F] = Option(pins.get(key(data, params)))
+
+  /** The fit, but only while exactly ONE is recorded: with several, the
+    * right one is unknowable without the dataset, and None (the driver's
+    * rows-only fallback) beats pinning the wrong model and surfacing as a
+    * spurious oracle mismatch.
+    */
+  def sole: Option[F] =
+    if (pins.size == 1) Some(pins.values.iterator.next()) else None
+}
+
 /** The session-cache decisions every cache family shares: the key, how a
-  * checkpointed entry is freed, the bound, and the pin-until-release
-  * registry for frames an operator keeps persisted past its own call.
+  * checkpointed entry is freed, the bound, the pin-until-release registry
+  * for frames an operator keeps persisted past its own call, and the one
+  * place a loop turns AQE off ([[withoutAqe]]). Beside it live the
+  * checkpoint cache ([[PlanCache]]), the fit memo ([[FitMemo]]) and the
+  * fit-pin registry ([[FitPins]]).
   */
 private[graft] object PlanCache {
 
@@ -187,6 +228,21 @@ private[graft] object PlanCache {
   def releasePerQuery(spark: SparkSession): Unit = {
     releasePins(spark, DistributedRank)
     releasePins(spark, Mixture)
+  }
+
+  /** Run `body` with `spark.sql.adaptive.enabled` set to false, then put
+    * back the value it had (`true` if unset). The loops that use it run
+    * small per-round plans whose joins are already broadcast-hinted, or
+    * checkpoint a layout AQE would hide; see each call site. The setting
+    * is session-wide, so this is safe only while the session runs one
+    * query at a time, as Verify and Bench do.
+    */
+  def withoutAqe[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try body
+    finally spark.conf.set(key, prev)
   }
 
   /** The frames `owner` currently holds in `spark`. */

@@ -51,6 +51,13 @@ object Similarity {
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qe"), col("embedding")).as("sim"))
+    topKBySim(scored, k)
+  }
+
+  /** Each query's `k` most similar neighbors by `sim` (ties to the lower
+    * neighbor_id), numbered `rnk` and ordered by (query_id, rnk).
+    */
+  private def topKBySim(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("neighbor_id"))
     scored
       .withColumn("rnk", row_number().over(w))
@@ -114,19 +121,12 @@ object Similarity {
   private val quantizerCache = new FitMemo[(Int, Long), Array[Array[Double]]](16)
 
   /** Fitted IVF / PQ models (centroids or codebooks + the call's
-    * parameters) — read by the oracle-SQL generator after a Verify run to
-    * pin the seeded fit as literals in machine-generated DuckDB SQL
-    * (the golden-centroid pin; see graft.AnnOracles).
-    *
-    * The registry is keyed by (dataset plan key, every fit parameter), NOT
-    * last-write-wins: a multi-dataset or concurrent run records one entry
-    * per distinct (input, params), and the oracle dump selects the entry
-    * for the dataset it verified ([[ivfFitFor]]/[[pqFitFor]]) — a stale
-    * pin from some other ANN call can never masquerade as the verified
-    * run's model. In-memory (LocalRelation) inputs key by schema only
-    * (their data is invisible to plan canonicalization — same caveat as
-    * [[PlanCache.planKey]]), which is fine for pinning: the Verify flow only
-    * ever pins file-backed tables.
+    * parameters), one [[FitPins]] registry per index type, keyed by
+    * (dataset, every fit parameter). [[graft.AnnOracles]] reads them after
+    * a Verify run to pin the seeded fit as literals in machine-generated
+    * DuckDB SQL (the golden-centroid pin): the `*FitFor` lookups select
+    * the fit of the dataset it verified, and `sole` serves context-free
+    * callers.
     */
   final case class IvfFit(
       centers: Array[Array[Double]], numQueries: Int, k: Int, nlist: Int, nprobe: Int)
@@ -144,78 +144,61 @@ object Similarity {
       centers: Array[Array[Double]], books: Array[Array[Array[Double]]],
       splitId: Long, numQueries: Int, k: Int, nlist: Int, nprobe: Int,
       m: Int, ksub: Int, rerank: Int)
+  final case class SemFit(centers: Array[Array[Double]], nlist: Int, threshold: Double)
+  final case class CaFit(centers: Array[Array[Double]], nlist: Int)
 
-  private val ivfFits =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfFit]()
-  private val ivfAppendFits =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfAppendFit]()
-  private val pqFits =
-    new java.util.concurrent.ConcurrentHashMap[String, PqFit]()
-  private val ivfPqFits =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfPqFit]()
-  private val ivfPqAppendFits =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfPqAppendFit]()
+  private[graft] val ivfPins = new FitPins[(Int, Int, Int, Int, Long), IvfFit]
+  private[graft] val ivfAppendPins =
+    new FitPins[(Long, Int, Int, Int, Int, Long), IvfAppendFit]
+  private[graft] val pqPins = new FitPins[(Int, Int, Int, Int, Int, Long), PqFit]
+  private[graft] val ivfPqPins =
+    new FitPins[(Int, Int, Int, Int, Int, Int, Int, Long), IvfPqFit]
+  private[graft] val ivfPqAppendPins =
+    new FitPins[(Long, Int, Int, Int, Int, Int, Int, Int, Long), IvfPqAppendFit]
+  private[graft] val semPins = new FitPins[(Int, Double, Long), SemFit]
+  private[graft] val caPins = new FitPins[(Int, Long), CaFit]
 
-  private def pinKey(embeddings: DataFrame, params: String): String =
-    PlanCache.planKey(embeddings).map(_.productIterator.mkString("\n"))
-      .getOrElse("<local:" + embeddings.schema.simpleString + ">") + "|" + params
-
-  /** The fit recorded for exactly this (dataset, params) call, if it ran. */
   private[graft] def ivfFitFor(
       embeddings: DataFrame,
       numQueries: Int = 8, k: Int = 5, nlist: Int = 16, nprobe: Int = 4,
       seed: Long = 42L): Option[IvfFit] =
-    Option(ivfFits.get(
-      pinKey(embeddings, s"ivf:$numQueries:$k:$nlist:$nprobe:$seed")))
+    ivfPins.get(embeddings, (numQueries, k, nlist, nprobe, seed))
 
   private[graft] def ivfAppendFitFor(
       embeddings: DataFrame,
       splitId: Long = 250L, numQueries: Int = 8, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): Option[IvfAppendFit] =
-    Option(ivfAppendFits.get(
-      pinKey(embeddings, s"ivfapp:$splitId:$numQueries:$k:$nlist:$nprobe:$seed")))
+    ivfAppendPins.get(embeddings, (splitId, numQueries, k, nlist, nprobe, seed))
 
   private[graft] def pqFitFor(
       embeddings: DataFrame,
       numQueries: Int = 8, k: Int = 5, m: Int = 16, ksub: Int = 16,
       rerank: Int = 4, seed: Long = 42L): Option[PqFit] =
-    Option(pqFits.get(
-      pinKey(embeddings, s"pq:$numQueries:$k:$m:$ksub:$rerank:$seed")))
+    pqPins.get(embeddings, (numQueries, k, m, ksub, rerank, seed))
 
   private[graft] def ivfPqFitFor(
       embeddings: DataFrame,
       numQueries: Int = 8, k: Int = 5, nlist: Int = 16, nprobe: Int = 4,
       m: Int = 16, ksub: Int = 16, rerank: Int = 4,
       seed: Long = 42L): Option[IvfPqFit] =
-    Option(ivfPqFits.get(
-      pinKey(embeddings, s"ivfpq:$numQueries:$k:$nlist:$nprobe:$m:$ksub:$rerank:$seed")))
-
-  /** Unambiguous fallback for context-free callers: the fit, but only when
-    * exactly ONE has been recorded in this JVM. With several live fits the
-    * right one is unknowable without the dataset — returning None (→ the
-    * driver's documented rows-only fallback) beats pinning the wrong model
-    * and surfacing as a spurious oracle mismatch.
-    */
-  private[graft] def soleIvfFit: Option[IvfFit] =
-    if (ivfFits.size == 1) Some(ivfFits.values.iterator.next()) else None
-  private[graft] def soleIvfAppendFit: Option[IvfAppendFit] =
-    if (ivfAppendFits.size == 1) Some(ivfAppendFits.values.iterator.next())
-    else None
-  private[graft] def solePqFit: Option[PqFit] =
-    if (pqFits.size == 1) Some(pqFits.values.iterator.next()) else None
-  private[graft] def soleIvfPqFit: Option[IvfPqFit] =
-    if (ivfPqFits.size == 1) Some(ivfPqFits.values.iterator.next()) else None
-  private[graft] def soleIvfPqAppendFit: Option[IvfPqAppendFit] =
-    if (ivfPqAppendFits.size == 1) Some(ivfPqAppendFits.values.iterator.next())
-    else None
+    ivfPqPins.get(embeddings, (numQueries, k, nlist, nprobe, m, ksub, rerank, seed))
 
   private[graft] def ivfPqAppendFitFor(
       embeddings: DataFrame,
       splitId: Long = 250L, numQueries: Int = 8, k: Int = 5,
       nlist: Int = 16, nprobe: Int = 4, m: Int = 16, ksub: Int = 16,
       rerank: Int = 4, seed: Long = 42L): Option[IvfPqAppendFit] =
-    Option(ivfPqAppendFits.get(pinKey(embeddings,
-      s"ivfpqapp:$splitId:$numQueries:$k:$nlist:$nprobe:$m:$ksub:$rerank:$seed")))
+    ivfPqAppendPins.get(embeddings,
+      (splitId, numQueries, k, nlist, nprobe, m, ksub, rerank, seed))
+
+  private[graft] def semFitFor(
+      embeddings: DataFrame, nlist: Int = 16, threshold: Double = 0.4,
+      seed: Long = 42L): Option[SemFit] =
+    semPins.get(embeddings, (nlist, threshold, seed))
+
+  private[graft] def caFitFor(
+      embeddings: DataFrame, nlist: Int = 16, seed: Long = 42L): Option[CaFit] =
+    caPins.get(embeddings, (nlist, seed))
 
   // ---- index persistence (the build-once/query-many regime ANN indexes
   // exist for): IVF centroids and PQ codebooks as a plain parquet model
@@ -514,11 +497,7 @@ object Similarity {
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qe"), col("embedding")).as("sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy(col("query_id"), col("rnk"))
+    topKBySim(scored, k)
   }
 
   /** IVF (inverted-file) approximate top-k: a coarse quantizer partitions
@@ -540,63 +519,13 @@ object Similarity {
       nprobe: Int = 4,
       seed: Long = 42L,
       indexPath: Option[String] = None): DataFrame = {
-    // vectors with null elements are excluded from index and query set up
-    // front (dot(x,x) is null iff an element is null): PqEncode would null
-    // their cell (silently dropped corpus-side) while an all-null probe
-    // ranking would still probe cells by index — explicit exclusion keeps
-    // engine and pinned oracle trivially aligned (oracle mirrors in `e`)
-    val embDouble = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+    val embDouble = nonNullVectors(embeddings)
     val centers: Array[Array[Double]] = withIndexModel(
       embeddings, embDouble, indexPath,
       needCenters = Some((nlist, seed)), needBooks = None)._1.get
-    if (ivfFits.size > 16) ivfFits.clear() // same wholesale bound as the caches
-    ivfFits.put(
-      pinKey(embeddings, s"ivf:$numQueries:$k:$nlist:$nprobe:$seed"),
+    ivfPins.record(embeddings, (numQueries, k, nlist, nprobe, seed),
       IvfFit(centers, numQueries, k, nlist, nprobe))
-
-    // Corpus-side assignment is [[graft.functions.PqEncode]] with a single
-    // subspace spanning the whole vector — nearest-centroid in one native
-    // loop (codebook as a codegen reference object, not a literal tree).
-    val assigned = embDouble.select(
-      col("vec_id"), col("embedding"),
-      element_at(
-        graft.functions.GraftColumns.pqEncode(col("embedding"), Array(centers)), 1)
-        .as("cell"))
-
-    // Query probes from the same one-pass LUT primitive as PQ
-    // ([[graft.functions.PqLut]], single subspace spanning the vector):
-    // score(cell) = lut[cell] − ½|c|² — identical arithmetic to the
-    // per-centroid literal-array struct chain it replaces (which was a
-    // ~1000-node expression tree re-janino'd per plan build), so the
-    // pinned oracle is unchanged. Larger score = nearer centroid.
-    val hnLit = array(
-      centers.map(c => lit(c.map(x => x * x).sum / 2.0)).toIndexedSeq: _*)
-    val queries = embDouble
-      .filter(col("vec_id") < numQueries)
-      .select(
-        col("vec_id").as("query_id"), col("embedding").as("qe"),
-        posexplode(graft.functions.GraftColumns.pqLut(col("embedding"), Array(centers))))
-      .select(col("query_id"), col("qe"), col("pos").as("cell"),
-        (col("col") - element_at(hnLit, col("pos") + 1)).as("score"))
-      .withColumn("probe_rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("cell"))))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("qe"), col("cell"))
-
-    val scored = assigned
-      .join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("qe"), col("embedding")).as("sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy(col("query_id"), col("rnk"))
+    ivfPipeline(embDouble, centers, col("vec_id") < numQueries, k, nprobe)
   }
 
   /** Incremental IVF index maintenance — the FAISS `add` contract
@@ -629,54 +558,91 @@ object Similarity {
       nprobe: Int = 4,
       seed: Long = 42L,
       indexPath: Option[String] = None): DataFrame = {
-    val embDouble = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+    val embDouble = nonNullVectors(embeddings)
     val corpus = embeddings.filter(col("vec_id") < splitId)
     val corpusD = embDouble.filter(col("vec_id") < splitId)
     // model from the corpus ONLY — arrivals must not move the quantizer
     val centers: Array[Array[Double]] = withIndexModel(
       corpus, corpusD, indexPath,
       needCenters = Some((nlist, seed)), needBooks = None)._1.get
-    if (ivfAppendFits.size > 16) ivfAppendFits.clear()
-    ivfAppendFits.put(
-      pinKey(embeddings, s"ivfapp:$splitId:$numQueries:$k:$nlist:$nprobe:$seed"),
+    ivfAppendPins.record(embeddings, (splitId, numQueries, k, nlist, nprobe, seed),
       IvfAppendFit(centers, splitId, numQueries, k, nlist, nprobe))
-
     // the grown index: standing corpus AND the arrival delta, one
     // map-only nearest-centroid pass each (the same PqEncode primitive)
-    val assigned = embDouble.select(
-      col("vec_id"), col("embedding"),
-      element_at(
-        graft.functions.GraftColumns.pqEncode(col("embedding"), Array(centers)), 1)
-        .as("cell"))
+    ivfPipeline(embDouble, centers,
+      col("vec_id") >= splitId && col("vec_id") < splitId + numQueries, k, nprobe)
+  }
 
-    val hnLit = array(
-      centers.map(c => lit(c.map(x => x * x).sum / 2.0)).toIndexedSeq: _*)
-    val queries = embDouble
-      .filter(col("vec_id") >= splitId && col("vec_id") < splitId + numQueries)
-      .select(
-        col("vec_id").as("query_id"), col("embedding").as("qe"),
-        posexplode(graft.functions.GraftColumns.pqLut(col("embedding"), Array(centers))))
-      .select(col("query_id"), col("qe"), col("pos").as("cell"),
-        (col("col") - element_at(hnLit, col("pos") + 1)).as("score"))
-      .withColumn("probe_rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("cell"))))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("qe"), col("cell"))
-
+  /** The shared IVF probe pipeline over an already-resolved quantizer:
+    * corpus cell assignment, `nprobe` cell probing per query
+    * ([[probeCells]]), exact cosine within the probed cells, top-k per
+    * query. `isQuery` selects the query rows (the standalone index
+    * queries with the numQueries lowest ids; the append form with an
+    * arrival range).
+    */
+  private def ivfPipeline(
+      embDouble: DataFrame,
+      centers: Array[Array[Double]],
+      isQuery: Column,
+      k: Int, nprobe: Int): DataFrame = {
+    val assigned = embDouble.select(col("vec_id"), col("embedding"), nearestCell(centers))
+    val queries = probeCells(embDouble.filter(isQuery), centers, nprobe,
+      "qe" -> col("embedding"))
     val scored = assigned
       .join(broadcast(queries), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qe"), col("embedding")).as("sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy(col("query_id"), col("rnk"))
+    topKBySim(scored, k)
+  }
+
+  /** The vectors as (vec_id, embedding: array<double>), without those
+    * holding a null element (dot(x,x) is null iff an element is null):
+    * PqEncode would null their cell (silently dropped corpus-side) while
+    * an all-null probe ranking would still probe cells by index, so
+    * excluding them from index and query set up front keeps engine and
+    * pinned oracle trivially aligned (the oracle mirrors this in `e`).
+    */
+  private def nonNullVectors(embeddings: DataFrame): DataFrame =
+    embeddings
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+
+  /** Nearest IVF cell of `embedding`, as column `cell`: [[graft.functions.PqEncode]]
+    * with a single subspace spanning the whole vector — nearest-centroid
+    * in one native loop (codebook as a codegen reference object, not a
+    * literal tree).
+    */
+  private def nearestCell(centers: Array[Array[Double]]): Column =
+    element_at(
+      graft.functions.GraftColumns.pqEncode(col("embedding"), Array(centers)), 1)
+      .as("cell")
+
+  /** Each query row's `nprobe` nearest cells, as (query_id, the `carry`
+    * columns, cell). Scores come from the same one-pass LUT primitive as
+    * PQ ([[graft.functions.PqLut]], single subspace spanning the vector):
+    * score(cell) = lut[cell] − ½|c|², larger = nearer, ties to the lower
+    * cell — identical arithmetic to the per-centroid literal-array struct
+    * chain it replaced (a ~1000-node expression tree re-janino'd per plan
+    * build), so the pinned oracle is unchanged.
+    */
+  private def probeCells(
+      queryRows: DataFrame, centers: Array[Array[Double]], nprobe: Int,
+      carry: (String, Column)*): DataFrame = {
+    val hnLit = array(
+      centers.map(c => lit(c.map(x => x * x).sum / 2.0)).toIndexedSeq: _*)
+    val kept = carry.map { case (name, _) => col(name) }
+    queryRows
+      .select((col("vec_id").as("query_id") +: carry.map { case (n, c) => c.as(n) }) :+
+        posexplode(graft.functions.GraftColumns.pqLut(col("embedding"), Array(centers))): _*)
+      .select((col("query_id") +: kept) ++ Seq(col("pos").as("cell"),
+        (col("col") - element_at(hnLit, col("pos") + 1)).as("score")): _*)
+      .withColumn("probe_rank",
+        row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy(col("score").desc, col("cell"))))
+      .filter(col("probe_rank") <= nprobe)
+      .select((col("query_id") +: kept) :+ col("cell"): _*)
   }
 
   /** PQ codebook cache (same rationale as [[quantizerCache]]): m subspace
@@ -742,47 +708,61 @@ object Similarity {
       rerank: Int = 4,
       seed: Long = 42L,
       indexPath: Option[String] = None): DataFrame = {
-    // null-element vectors excluded up front — see ivfTopK
-    val embDouble = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+    val embDouble = nonNullVectors(embeddings)
     val books: Array[Array[Array[Double]]] = withIndexModel(
       embeddings, embDouble, indexPath,
       needCenters = None, needBooks = Some((m, ksub, seed)))._2.get
-    if (pqFits.size > 16) pqFits.clear() // same wholesale bound as the caches
-    pqFits.put(
-      pinKey(embeddings, s"pq:$numQueries:$k:$m:$ksub:$rerank:$seed"),
+    pqPins.record(embeddings, (numQueries, k, m, ksub, rerank, seed),
       PqFit(books, numQueries, k, m, ksub, rerank))
     // per-row encode: ONE native-expression pass assigns all m codes
     // ([[graft.functions.PqEncode]] — the compositional m·ksub slice()+dot
     // plan allocated a subarray per centroid per row)
-    val withCodes = embDouble.select(
+    val corpus = withNorm(embDouble.select(
       col("vec_id"),
-      graft.functions.GraftColumns.pqEncode(col("embedding"), books).as("codes"))
-    // reconstructed norm²: code-indexed lookup summed in ONE native loop
-    // ([[graft.functions.CodeLookupSum]] over a constant-folded literal
-    // table — arithmetic order identical to the per-subspace element_at
-    // chain it replaces, so the pinned oracle is unchanged)
-    val n2Lit = array((for (j <- 0 until m; c <- books(j))
-      yield lit(c.map(x => x * x).sum)).toIndexedSeq: _*)
-    val corpus = withCodes.withColumn("nx",
-      sqrt(graft.functions.GraftColumns.codeLookupSum(col("codes"), n2Lit)))
+      graft.functions.GraftColumns.pqEncode(col("embedding"), books).as("codes")), books, m)
 
     // the whole m·ksub inner-product LUT in one native pass
     // ([[graft.functions.PqLut]] — the compositional form was ~3000
     // expression nodes of slice()+literal-array dots, paying janino
     // compile time on every plan build)
+    val isQuery = col("vec_id") < numQueries
     val queries = embDouble
-      .filter(col("vec_id") < numQueries)
+      .filter(isQuery)
       .select(
         col("vec_id").as("query_id"),
         graft.functions.GraftColumns.pqLut(col("embedding"), books).as("ip_lut"),
         sqrt(dot(col("embedding"), col("embedding"))).as("nq"))
+    adcTopK(corpus.join(broadcast(queries), col("vec_id") =!= col("query_id")),
+      embDouble, isQuery, k, rerank)
+  }
 
+  /** `codes` plus its reconstructed norm `nx` = sqrt(Σ_j |c_{j,code_j}|²):
+    * a code-indexed lookup summed in ONE native loop
+    * ([[graft.functions.CodeLookupSum]] over a constant-folded literal
+    * table — arithmetic order identical to the per-subspace element_at
+    * chain it replaced, so the pinned oracle is unchanged).
+    */
+  private def withNorm(
+      withCodes: DataFrame, books: Array[Array[Array[Double]]], m: Int): DataFrame = {
+    val n2Lit = array((for (j <- 0 until m; c <- books(j))
+      yield lit(c.map(x => x * x).sum)).toIndexedSeq: _*)
+    withCodes.withColumn("nx",
+      sqrt(graft.functions.GraftColumns.codeLookupSum(col("codes"), n2Lit)))
+  }
+
+  /** ADC top-k over candidate (corpus row, query) pairs carrying `codes`,
+    * `nx`, `ip_lut` and `nq`: the approximate cosine `sim_pq` =
+    * (Σ_j ip_lut[code_j]) / (nq·nx) ranks a k·rerank shortlist per query,
+    * then an exact-cosine re-rank of that shortlist gives the top-k — raw
+    * vectors are touched only for those rows. `isQuery` selects the query
+    * rows of `embDouble`.
+    */
+  private def adcTopK(
+      pairs: DataFrame, embDouble: DataFrame, isQuery: Column,
+      k: Int, rerank: Int): DataFrame = {
     val adcIp =
       graft.functions.GraftColumns.codeLookupSum(col("codes"), col("ip_lut"))
-    val scored = corpus
-      .join(broadcast(queries), col("vec_id") =!= col("query_id"))
+    val scored = pairs
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),
         (adcIp / (col("nq") * col("nx"))).as("sim_pq"))
@@ -792,7 +772,7 @@ object Similarity {
       .filter(col("pq_rnk") <= k * rerank)
     // exact-cosine re-rank of the shortlist (raw vectors touched only here)
     val qVecs = embDouble
-      .filter(col("vec_id") < numQueries)
+      .filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val nVecs = embDouble.select(
       col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
@@ -840,10 +820,7 @@ object Similarity {
       rerank: Int = 4,
       seed: Long = 42L,
       indexPath: Option[String] = None): DataFrame = {
-    // null-element vectors excluded up front — see ivfTopK
-    val embDouble = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+    val embDouble = nonNullVectors(embeddings)
     // both fits reuse the plan-keyed caches their standalone queries use —
     // an ivfTopK/pqTopK call on the same dataset and params shares them;
     // with indexPath, one model file carries BOTH parts
@@ -852,9 +829,7 @@ object Similarity {
       needCenters = Some((nlist, seed)), needBooks = Some((m, ksub, seed)))
     val centers: Array[Array[Double]] = centersOpt.get
     val books: Array[Array[Array[Double]]] = booksOpt.get
-    if (ivfPqFits.size > 16) ivfPqFits.clear()
-    ivfPqFits.put(
-      pinKey(embeddings, s"ivfpq:$numQueries:$k:$nlist:$nprobe:$m:$ksub:$rerank:$seed"),
+    ivfPqPins.record(embeddings, (numQueries, k, nlist, nprobe, m, ksub, rerank, seed),
       IvfPqFit(centers, books, numQueries, k, nlist, nprobe, m, ksub, rerank))
     ivfPqPipeline(embDouble, centers, books,
       col("vec_id") < numQueries, k, nprobe, m, rerank)
@@ -881,9 +856,7 @@ object Similarity {
       rerank: Int = 4,
       seed: Long = 42L,
       indexPath: Option[String] = None): DataFrame = {
-    val embDouble = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+    val embDouble = nonNullVectors(embeddings)
     val corpus = embeddings.filter(col("vec_id") < splitId)
     val corpusD = embDouble.filter(col("vec_id") < splitId)
     val (centersOpt, booksOpt) = withIndexModel(
@@ -891,10 +864,8 @@ object Similarity {
       needCenters = Some((nlist, seed)), needBooks = Some((m, ksub, seed)))
     val centers = centersOpt.get
     val books = booksOpt.get
-    if (ivfPqAppendFits.size > 16) ivfPqAppendFits.clear()
-    ivfPqAppendFits.put(
-      pinKey(embeddings,
-        s"ivfpqapp:$splitId:$numQueries:$k:$nlist:$nprobe:$m:$ksub:$rerank:$seed"),
+    ivfPqAppendPins.record(embeddings,
+      (splitId, numQueries, k, nlist, nprobe, m, ksub, rerank, seed),
       IvfPqAppendFit(centers, books, splitId, numQueries, k,
         nlist, nprobe, m, ksub, rerank))
     ivfPqPipeline(embDouble, centers, books,
@@ -916,66 +887,22 @@ object Similarity {
       isQuery: Column,
       k: Int, nprobe: Int, m: Int, rerank: Int): DataFrame = {
     // corpus encode: cell + m codes + reconstructed norm, one row-local pass
-    val n2Lit = array((for (j <- 0 until m; c <- books(j))
-      yield lit(c.map(x => x * x).sum)).toIndexedSeq: _*)
-    val corpus = embDouble.select(
+    val corpus = withNorm(embDouble.select(
       col("vec_id"),
-      element_at(
-        graft.functions.GraftColumns.pqEncode(col("embedding"), Array(centers)), 1)
-        .as("cell"),
-      graft.functions.GraftColumns.pqEncode(col("embedding"), books).as("codes"))
-      .withColumn("nx",
-        sqrt(graft.functions.GraftColumns.codeLookupSum(col("codes"), n2Lit)))
+      nearestCell(centers),
+      graft.functions.GraftColumns.pqEncode(col("embedding"), books).as("codes")), books, m)
 
     // query side: nprobe probed cells (same scoring as ivfTopK) x the ADC
     // inner-product LUT + query norm (same as pqTopK), broadcast together
-    val hnLit = array(
-      centers.map(c => lit(c.map(x => x * x).sum / 2.0)).toIndexedSeq: _*)
-    val queries = embDouble
-      .filter(isQuery)
-      .select(
-        col("vec_id").as("query_id"),
-        graft.functions.GraftColumns.pqLut(col("embedding"), books).as("ip_lut"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nq"),
-        posexplode(graft.functions.GraftColumns.pqLut(col("embedding"), Array(centers))))
-      .select(col("query_id"), col("ip_lut"), col("nq"), col("pos").as("cell"),
-        (col("col") - element_at(hnLit, col("pos") + 1)).as("score"))
-      .withColumn("probe_rank",
-        row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("cell"))))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("ip_lut"), col("nq"), col("cell"))
+    val queries = probeCells(embDouble.filter(isQuery), centers, nprobe,
+      "ip_lut" -> graft.functions.GraftColumns.pqLut(col("embedding"), books),
+      "nq" -> sqrt(dot(col("embedding"), col("embedding"))))
 
     // ADC scoring restricted to probed cells: the scan ships codes, never
     // embeddings; each (query, corpus-row) pair costs m lookups + adds
-    val adcIp =
-      graft.functions.GraftColumns.codeLookupSum(col("codes"), col("ip_lut"))
-    val scored = corpus
-      .join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        (adcIp / (col("nq") * col("nx"))).as("sim_pq"))
-    val wPq = Window.partitionBy(col("query_id")).orderBy(desc("sim_pq"), asc("neighbor_id"))
-    val shortlist = scored
-      .withColumn("pq_rnk", row_number().over(wPq))
-      .filter(col("pq_rnk") <= k * rerank)
-
-    // exact-cosine re-rank of the shortlist (raw vectors touched only here)
-    val qVecs = embDouble
-      .filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val nVecs = embDouble.select(
-      col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-    val wExact = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("neighbor_id"))
-    shortlist
-      .join(broadcast(qVecs), "query_id")
-      .join(nVecs, "neighbor_id")
-      .withColumn("sim", cosine(col("qe"), col("ne")))
-      .withColumn("rnk", row_number().over(wExact))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("sim_pq"), col("sim"))
-      .orderBy(col("query_id"), col("rnk"))
+    adcTopK(
+      corpus.join(broadcast(queries), Seq("cell")).filter(col("vec_id") =!= col("query_id")),
+      embDouble, isQuery, k, rerank)
   }
 
   /** Per-label embedding statistics (count + mean L2 norm — all derived
@@ -1132,16 +1059,6 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
-  final case class SemFit(centers: Array[Array[Double]], nlist: Int, threshold: Double)
-  private val semFits =
-    new java.util.concurrent.ConcurrentHashMap[String, SemFit]()
-  private[graft] def semFitFor(
-      embeddings: DataFrame, nlist: Int = 16, threshold: Double = 0.4,
-      seed: Long = 42L): Option[SemFit] =
-    Option(semFits.get(pinKey(embeddings, s"sem:$nlist:$threshold:$seed")))
-  private[graft] def soleSemFit: Option[SemFit] =
-    if (semFits.size == 1) Some(semFits.values.iterator.next()) else None
-
   /** Hybrid dedup — the verdict a production pipeline actually acts on:
     * byte-identical duplicates (exact content digest) AND semantic
     * near-duplicates (SemDeDup cell-scoped cosine) in ONE per-document
@@ -1172,15 +1089,6 @@ object Similarity {
       .orderBy(col("doc_id"))
   }
 
-  final case class CaFit(centers: Array[Array[Double]], nlist: Int)
-  private val caFits =
-    new java.util.concurrent.ConcurrentHashMap[String, CaFit]()
-  private[graft] def caFitFor(
-      embeddings: DataFrame, nlist: Int = 16, seed: Long = 42L): Option[CaFit] =
-    Option(caFits.get(pinKey(embeddings, s"ca:$nlist:$seed")))
-  private[graft] def soleCaFit: Option[CaFit] =
-    if (caFits.size == 1) Some(caFits.values.iterator.next()) else None
-
   /** K-means cluster audit with label purity — the clustering-quality
     * check a curation pipeline runs when it clusters embeddings (for
     * SemDeDup, curriculum buckets, topic balancing): per cell, the vector
@@ -1200,14 +1108,9 @@ object Similarity {
       .filter(dot(col("embedding"), col("embedding")).isNotNull)
     val centers = quantizerCache.getOrFit(embeddings, (nlist, seed))(
       fitCoarseQuantizer(embDouble.drop("label"), nlist, seed))
-    if (caFits.size > 16) caFits.clear()
-    caFits.put(pinKey(embeddings, s"ca:$nlist:$seed"), CaFit(centers, nlist))
+    caPins.record(embeddings, (nlist, seed), CaFit(centers, nlist))
 
-    val assigned = embDouble.select(
-      col("vec_id"), col("label"),
-      element_at(
-        graft.functions.GraftColumns.pqEncode(col("embedding"), Array(centers)), 1)
-        .as("cell"))
+    val assigned = embDouble.select(col("vec_id"), col("label"), nearestCell(centers))
     val perCellLabel = assigned.groupBy(col("cell"), col("label"))
       .agg(count(lit(1)).as("cnt"))
     val wCell = Window.partitionBy(col("cell"))
@@ -1244,22 +1147,12 @@ object Similarity {
       nlist: Int = 16,
       threshold: Double = 0.4,
       seed: Long = 42L): DataFrame = {
-    val embDouble = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+    val embDouble = nonNullVectors(embeddings)
     val centers = quantizerCache.getOrFit(embeddings, (nlist, seed))(
       fitCoarseQuantizer(embDouble, nlist, seed))
-    if (semFits.size > 16) semFits.clear()
-    semFits.put(
-      pinKey(embeddings, s"sem:$nlist:$threshold:$seed"),
-      SemFit(centers, nlist, threshold))
-
-    val assigned = embDouble.select(
-      col("vec_id"), col("embedding"),
-      element_at(
-        graft.functions.GraftColumns.pqEncode(col("embedding"), Array(centers)), 1)
-        .as("cell"))
-    semVerdicts(assigned, threshold)
+    semPins.record(embeddings, (nlist, threshold, seed), SemFit(centers, nlist, threshold))
+    semVerdicts(
+      embDouble.select(col("vec_id"), col("embedding"), nearestCell(centers)), threshold)
   }
 
   /** Shared SemDeDup verdict scan over any cell assignment: within-cell
@@ -1304,9 +1197,7 @@ object Similarity {
       planeBits: Int = 4,
       threshold: Double = 0.4): DataFrame = {
     val dim = 64
-    val embDouble = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+    val embDouble = nonNullVectors(embeddings)
     val flatPlanes = Array.tabulate(planeBits * dim) { idx =>
       planeWeight(idx / dim, idx % dim, dim)
     }
@@ -1587,10 +1478,7 @@ object Similarity {
     // state checkpoint also keeps its hash(vec_id) partitioning (see
     // SuffixArray.docClustered), so each round's state-dNew join
     // re-shuffles only the dNew side.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = embeddings.sparkSession.conf.get(aqeKey, "true")
-    embeddings.sparkSession.conf.set(aqeKey, "false")
-    try {
+    PlanCache.withoutAqe(embeddings.sparkSession) {
       var i = 2
       var exhausted = false
       while (i <= k && !exhausted) {
@@ -1615,7 +1503,7 @@ object Similarity {
         else picks += ((i, pick.head.getLong(0), pick.head.getDecimal(1)))
         i += 1
       }
-    } finally embeddings.sparkSession.conf.set(aqeKey, aqePrev)
+    }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("rank",
         org.apache.spark.sql.types.IntegerType, nullable = false),
@@ -1758,9 +1646,7 @@ object Similarity {
       minPts: Int = 3,
       maxIters: Int = 20): DataFrame = {
     val dim = 64
-    val embDouble = embeddings
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      .filter(dot(col("embedding"), col("embedding")).isNotNull)
+    val embDouble = nonNullVectors(embeddings)
     val flatPlanes = Array.tabulate(planeBits * dim) { idx =>
       planeWeight(idx / dim, idx % dim, dim)
     }

@@ -196,34 +196,6 @@ object SuffixArray {
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         (col("len") - col("pos") + 1).cast("long").as("rem"),
         expr(s"substr(text, pos, $BaseBlock)").as("b8"))
-    // Every level is checkpointed hash-partitioned by doc_id and sorted
-    // by (doc_id, pos): localCheckpoint preserves the physical plan's
-    // outputPartitioning/outputOrdering into the LogicalRDD, so the
-    // per-doc `lead` windows — one per doubling round AND one per LRS
-    // bisection probe (sharedPrefixGroups) — need no Exchange and no
-    // Sort. Before this, each of the ~log2(LRS) probes re-shuffled and
-    // re-sorted the full character frame (suffix_lrs alone moved ~400 MB
-    // of shuffle at sf0.1; at corpus scale the probe cost was
-    // rounds×(shuffle+sort) instead of rounds×map).
-    // AQE must be OFF while the checkpoint materializes: the repartition
-    // inserts an Exchange, AQE wraps the whole plan in
-    // AdaptiveSparkPlanExec, and the LogicalRDD capture then sees
-    // UnknownPartitioning/no ordering — the layout is physically there
-    // but invisible to downstream planning, so every window still
-    // re-shuffles (measured: identical 406 MB with/without the
-    // repartition under AQE). Scoped to the materialization only and
-    // restored in finally; the consumers of the checkpoint run under
-    // whatever AQE setting the session has.
-    def docClustered(df: DataFrame): DataFrame = {
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.get(aqeKey, "true")
-      spark.conf.set(aqeKey, "false")
-      try df
-        .repartition(col("doc_id"))
-        .sortWithinPartitions(col("doc_id"), col("pos"))
-        .localCheckpoint()
-      finally spark.conf.set(aqeKey, prev)
-    }
     // base level: ranks of the 8-char blocks (substr of a short suffix is
     // the full suffix — equality and order match the sentinel semantics:
     // a proper prefix sorts before its extensions). On an ASCII corpus
@@ -256,6 +228,33 @@ object SuffixArray {
       IndexedSeq(cur), IndexedSeq(BaseBlock), dBound, distinctKnown)
   }
 
+  /** A rank level, checkpointed hash-partitioned by doc_id and sorted by
+    * (doc_id, pos): localCheckpoint preserves the physical plan's
+    * outputPartitioning/outputOrdering into the LogicalRDD, so the
+    * per-doc `lead` windows — one per doubling round AND one per LRS
+    * bisection probe (sharedPrefixGroups) — need no Exchange and no
+    * Sort. Before this, each of the ~log2(LRS) probes re-shuffled and
+    * re-sorted the full character frame (suffix_lrs alone moved ~400 MB
+    * of shuffle at sf0.1; at corpus scale the probe cost was
+    * rounds×(shuffle+sort) instead of rounds×map).
+    *
+    * AQE must be OFF while the checkpoint materializes: the repartition
+    * inserts an Exchange, AQE wraps the whole plan in
+    * AdaptiveSparkPlanExec, and the LogicalRDD capture then sees
+    * UnknownPartitioning/no ordering — the layout is physically there
+    * but invisible to downstream planning, so every window still
+    * re-shuffles (measured: identical 406 MB with/without the
+    * repartition under AQE). Scoped to the materialization only; the
+    * consumers of the checkpoint run under whatever AQE setting the
+    * session has.
+    */
+  private def docClustered(df: DataFrame): DataFrame =
+    PlanCache.withoutAqe(df.sparkSession) {
+      df.repartition(col("doc_id"))
+        .sortWithinPartitions(col("doc_id"), col("pos"))
+        .localCheckpoint()
+    }
+
   /** The doubling loop proper, entered either fresh (one base level) or
     * as a RESUME of a cached stop-bounded chain (its levels/blocks and
     * recorded loop state). Shared verbatim between the two entries so
@@ -267,16 +266,6 @@ object SuffixArray {
       initLevels: IndexedSeq[DataFrame], initBlocks: IndexedSeq[Long],
       dBound0: Long, distinctKnown0: Long): Ranks = {
     val spark = documents.sparkSession
-    def docClustered(df: DataFrame): DataFrame = {
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.get(aqeKey, "true")
-      spark.conf.set(aqeKey, "false")
-      try df
-        .repartition(col("doc_id"))
-        .sortWithinPartitions(col("doc_id"), col("pos"))
-        .localCheckpoint()
-      finally spark.conf.set(aqeKey, prev)
-    }
     var cur = initLevels.last
     var dBound = dBound0
     var distinctKnown = distinctKnown0

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Upsert
+import graft.operators.{HourlyAggregation, Upsert}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
@@ -350,23 +350,15 @@ object StreamingAgg {
     hourlyWindowAgg(events.withWatermark("ts", s"1 hour $grace"))
   }
 
-  /** The windowed-aggregate body over an ALREADY-watermarked frame —
+  /** The batch aggregate's body ([[HourlyAggregation.byHour]], distinct
+    * users counted by `exact_distinct_long`) over an ALREADY-watermarked
+    * frame —
     * shared by [[hourlyAggStream]] and the chained pipeline
     * [[dedupedHourlyAggStream]] (a streaming query may define its
     * event-time watermark only once, so composition must not re-stamp it).
     */
   private def hourlyWindowAgg(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(
-        count(lit(1)).as("event_count"),
-        expr("exact_distinct_long(user_id)").as("unique_user_count"),
-        round(sum(col("value")), 2).as("total_value"),
-        (round(sum(col("value")), 2) / count(col("value"))).as("avg_value"))
-      .select(
-        col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("event_type"), col("event_count"), col("unique_user_count"),
-        col("total_value"), col("avg_value"))
+    HourlyAggregation.byHour(events, expr("exact_distinct_long(user_id)"))
 
   /** Grouping key for the wall-clock window store: epoch-micros hour
     * floor + event type — the reference's `(window_start, event_type)`

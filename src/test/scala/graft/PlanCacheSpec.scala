@@ -1,13 +1,14 @@
 package graft
 
-import graft.operators.{FitMemo, PlanCache}
+import graft.operators.{FitMemo, FitPins, PlanCache}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** The session-cache module: the checkpoint cache, the fit memo and the
-  * pin registry, each exercised directly rather than through an operator.
+/** The session-cache module: the checkpoint cache, the fit memo, the
+  * fit-pin registry and the frame pin registry, each exercised directly
+  * rather than through an operator.
   */
 class PlanCacheSpec extends SparkTestBase {
   import spark.implicits._
@@ -90,6 +91,71 @@ class PlanCacheSpec extends SparkTestBase {
       assert(memo.get(corpus, 7).exists(_ eq first))
       assert(memo.get(corpus, 8).isEmpty, "parameters are part of the key")
     }
+  }
+
+  test("FitPins: keyed by dataset and params; a different dataset or params misses") {
+    val pins = new FitPins[(Int, Long), String]
+    withCorpus { a =>
+      pins.record(a, (16, 42L), "a")
+      assert(pins.get(a, (16, 42L)).contains("a"))
+      assert(pins.get(a, (8, 42L)).isEmpty, "parameters are part of the key")
+      assert(pins.get(a, (16, 7L)).isEmpty, "parameters are part of the key")
+      withCorpus { b =>
+        assert(pins.get(b, (16, 42L)).isEmpty, "another file-backed dataset hit")
+        pins.record(b, (16, 42L), "b")
+        assert(pins.get(b, (16, 42L)).contains("b"))
+        assert(pins.get(a, (16, 42L)).contains("a"))
+      }
+    }
+  }
+
+  test("FitPins: same-schema LocalRelations share a key, the last record wins") {
+    val pins = new FitPins[Int, String]
+    val one = Seq((1L, "x")).toDF("doc_id", "text")
+    val two = Seq((2L, "y"), (3L, "z")).toDF("doc_id", "text")
+    pins.record(one, 7, "one")
+    assert(pins.get(two, 7).contains("one"))
+    pins.record(two, 7, "two")
+    assert(pins.get(one, 7).contains("two"))
+    assert(pins.get(Seq(1L).toDF("doc_id"), 7).isEmpty, "another schema is another key")
+  }
+
+  test("FitPins: sole is defined only while exactly one entry exists") {
+    val pins = new FitPins[Int, String]
+    val local = Seq((1L, "x")).toDF("doc_id", "text")
+    assert(pins.sole.isEmpty)
+    pins.record(local, 1, "first")
+    assert(pins.sole.contains("first"))
+    pins.record(local, 1, "again")
+    assert(pins.sole.contains("again"), "a repeat record replaces the one entry")
+    pins.record(local, 2, "second")
+    assert(pins.sole.isEmpty)
+  }
+
+  test("FitPins: the 18th record clears the 17 held entries first") {
+    val pins = new FitPins[Int, Int]
+    val local = Seq((1L, "x")).toDF("doc_id", "text")
+    (1 to 17).foreach(i => pins.record(local, i, i))
+    assert((1 to 17).forall(i => pins.get(local, i).contains(i)), "17 entries are held")
+    pins.record(local, 18, 18)
+    assert((1 to 17).forall(i => pins.get(local, i).isEmpty))
+    assert(pins.get(local, 18).contains(18))
+    assert(pins.sole.contains(18))
+  }
+
+  test("withoutAqe: AQE is off inside the body and restored after, also on a throw") {
+    val key = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(key, "true")
+    try {
+      for (prev <- Seq("true", "false")) {
+        spark.conf.set(key, prev)
+        assert(PlanCache.withoutAqe(spark)(spark.conf.get(key)) == "false")
+        assert(spark.conf.get(key) == prev)
+        intercept[IllegalStateException](
+          PlanCache.withoutAqe(spark)(throw new IllegalStateException("body")))
+        assert(spark.conf.get(key) == prev)
+      }
+    } finally spark.conf.set(key, before)
   }
 
   test("pins: replace unpins the previous frames, add accumulates, release is per owner") {

@@ -2,10 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scan: session caches and per-session pin registries live in
-  * `operators/PlanCache.scala` only. A `ConcurrentHashMap[SparkSession, …]`
-  * or a `mutable.Map` holding DataFrames anywhere else under
-  * `src/main/scala` is a hand-rolled copy of one of them and fails here.
+/** Source scan: session caches, per-session pin registries and fit-pin
+  * registries live in `operators/PlanCache.scala` only. A
+  * `ConcurrentHashMap[SparkSession, …]`, a `mutable.Map` holding
+  * DataFrames, or a `ConcurrentHashMap` / `mutable.Map` whose value type
+  * ends in `Fit` anywhere else under `src/main/scala` is a hand-rolled
+  * copy of one of them (the last is a `FitPins`) and fails here.
   * Likewise `SparkSession.builder` is called only in `Harness.scala`.
   */
 class SessionCacheGuardSpec extends AnyFunSuite {
@@ -26,8 +28,13 @@ class SessionCacheGuardSpec extends AnyFunSuite {
         |  .empty[((String, String, String), Int), DataFrame]
         |private val fits = new ConcurrentHashMap[String, Array[Long]]()
         |private val ranks = mutable.Map.empty[(String, Int), (Long, Ranks)]
+        |private val ivfFits =
+        |  new java.util.concurrent.ConcurrentHashMap[String, IvfFit]()
+        |private val caFits = scala.collection.mutable.HashMap
+        |  .empty[(String, Int), Similarity.CaFit]
+        |private val caPins = new FitPins[(Int, Long), CaFit]
         |""".stripMargin
-    assert(violations(src) == Seq("live", "frames"))
+    assert(violations(src) == Seq("live", "frames", "ivfFits", "caFits"))
   }
 
   test("no session cache or pin registry outside PlanCache.scala") {
@@ -42,8 +49,8 @@ class SessionCacheGuardSpec extends AnyFunSuite {
       if !allowed((f.getName, name))
     } yield s"${f.getPath}: $name"
     assert(found.isEmpty,
-      "session cache outside operators/PlanCache.scala (use PlanCache, FitMemo " +
-        s"or the PlanCache pin registry): ${found.mkString(", ")}")
+      "session cache outside operators/PlanCache.scala (use PlanCache, FitMemo, " +
+        s"FitPins or the PlanCache pin registry): ${found.mkString(", ")}")
   }
 
   test("only Harness.scala builds a SparkSession") {
@@ -65,6 +72,7 @@ object SessionCacheGuardSpec {
     """ConcurrentHashMap\s*\[\s*(?:[\w.]+\.)?SparkSession\s*,""".r
   private val mutableMap =
     """mutable\s*\.\s*(?:Map|HashMap)\s*(?:\.\s*empty\s*)?\[""".r
+  private val concurrentMap = """ConcurrentHashMap\s*\[""".r
   private val valName = """\bva[lr]\s+(\w+)""".r
 
   /** String and char literals (kept) or comments (dropped). */
@@ -105,13 +113,19 @@ object SessionCacheGuardSpec {
     ""
   }
 
-  /** Names of the vals declaring a session-keyed map or a DataFrame map. */
+  /** Names of the vals declaring a session-keyed map, a DataFrame map or
+    * a map of fits.
+    */
   def violations(text: String): Seq[String] = {
+    def holding(maps: scala.util.matching.Regex, value: String) =
+      maps.findAllMatchIn(text)
+        .filter(m => lastTypeArg(text, m.end - 1).matches(value))
+        .map(_.start)
     val session = sessionKeyed.findAllMatchIn(text).map(_.start)
-    val frames = mutableMap.findAllMatchIn(text)
-      .filter(m => lastTypeArg(text, m.end - 1).matches("""(?:[\w.]+\.)?DataFrame"""))
-      .map(_.start)
-    (session ++ frames).toSeq.sorted.map { at =>
+    val frames = holding(mutableMap, """(?:[\w.]+\.)?DataFrame""")
+    val fit = """(?:[\w.]+\.)?\w*Fit"""
+    val fits = holding(concurrentMap, fit) ++ holding(mutableMap, fit)
+    (session ++ frames ++ fits).toSeq.distinct.sorted.map { at =>
       valName.findAllMatchIn(text.substring(0, at)).toSeq.lastOption
         .fold("<anonymous>")(_.group(1))
     }

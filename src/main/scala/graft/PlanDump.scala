@@ -21,10 +21,12 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     for ((name, fn) <- queries)
       Harness.run(spark) {
-        val txt = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), text(fn(spark, sfDir)))
       }.left.foreach(e => System.err.println(s"[plandump] $name failed: ${e.getMessage}"))
     spark.stop()
   }
+
+  /** The text dumped for one query: its formatted explain. */
+  def text(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
 }

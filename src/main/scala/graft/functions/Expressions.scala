@@ -506,9 +506,30 @@ case class PqEncode(
 
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)
+
+  // the codebooks compare and print by content, so two builds of one plan
+  // are equal and canonicalize alike, and plan strings carry no identity hash
+  override def equals(o: Any): Boolean = o match {
+    case p: PqEncode => child == p.child && m == p.m && ksub == p.ksub && dsub == p.dsub &&
+      java.util.Arrays.equals(flatBooks, p.flatBooks) &&
+      java.util.Arrays.equals(halfNorm2, p.halfNorm2)
+    case _ => false
+  }
+  private lazy val contentHash =
+    (child, PqEncode.digest(flatBooks), PqEncode.digest(halfNorm2), m, ksub, dsub).##
+  override def hashCode(): Int = contentHash
+  override def stringArgs: Iterator[Any] =
+    Iterator(child, PqEncode.show(flatBooks), PqEncode.show(halfNorm2), m, ksub, dsub)
 }
 
 object PqEncode {
+  /** Content hash of a codebook array. */
+  private[functions] def digest(a: Array[Double]): Int = java.util.Arrays.hashCode(a)
+
+  /** A codebook array as a plan string shows it: length and content hash. */
+  private[functions] def show(a: Array[Double]): String =
+    f"double[${a.length}]#${digest(a)}%08x"
+
   def encode(
       arr: ArrayData,
       books: Array[Double],
@@ -586,6 +607,17 @@ case class PqLut(
 
   override protected def withNewChildInternal(newChild: Expression): PqLut =
     copy(child = newChild)
+
+  // by content, as in PqEncode
+  override def equals(o: Any): Boolean = o match {
+    case p: PqLut => child == p.child && m == p.m && ksub == p.ksub && dsub == p.dsub &&
+      java.util.Arrays.equals(flatBooks, p.flatBooks)
+    case _ => false
+  }
+  private lazy val contentHash = (child, PqEncode.digest(flatBooks), m, ksub, dsub).##
+  override def hashCode(): Int = contentHash
+  override def stringArgs: Iterator[Any] =
+    Iterator(child, PqEncode.show(flatBooks), m, ksub, dsub)
 }
 
 object PqLut {

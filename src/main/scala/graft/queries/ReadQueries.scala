@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   * compile to pushed-down predicates, and orderBy+limit plans as
   * `TakeOrderedAndProject` (top-K per partition + driver merge — no global
   * sort, which is what makes Q2-style recency queries viable at 100 TB).
+  * Q3–Q5 end in one row per event type, so they `coalesce(1)` after the
+  * grouped aggregate and sort in that one partition: a global sort would
+  * add a sampling job and a range exchange to order at most a handful of
+  * rows, while the aggregate below the coalesce still runs distributed.
   */
 object ReadQueries {
 
@@ -99,17 +103,19 @@ object ReadQueries {
         // double, no rounding needed (cf. HourlyAggregation avg note)
         (sum(col("event_count")) / count(lit(1))).as("avg_events_per_hour"),
         count(lit(1)).as("window_count"))
+      .coalesce(1)
       .orderBy(desc("total_events"), asc("event_type"))
   }
 
   /** Q4 — `get_event_types` (get_event_types.sql:1-3): DISTINCT + sort. */
   def getEventTypes(agg: DataFrame): DataFrame =
-    agg.select(col("event_type")).distinct().orderBy(asc("event_type"))
+    agg.select(col("event_type")).distinct().coalesce(1).orderBy(asc("event_type"))
 
   /** Q5 — README.md:126-128 ad-hoc rollup: grouped sum of event counts. */
   def groupedSum(agg: DataFrame): DataFrame =
     agg
       .groupBy(col("event_type"))
       .agg(sum(col("event_count")).as("total_events"))
+      .coalesce(1)
       .orderBy(asc("event_type"))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{HourlyAggregation, Upsert}
+import graft.operators.HourlyAggregation
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *     than the reference's processing-time clock (documented divergence,
   *     SURVEY.md §2.7; for now()-stamped streams they coincide).
   *   - O10 60 s flush cadence: `Trigger.ProcessingTime("60 seconds")`.
-  *   - O14 idempotent upsert: last-write-wins merge per (window_start,
-  *     event_type) in foreachBatch — at-least-once replay is safe.
+  *   - O14 idempotent upsert: each foreachBatch call replaces its
+  *     (window_start, event_type) keys in the served table — at-least-once
+  *     replay is safe.
   *   - O4/O5 exact distinct: streaming aggregation can't plan
   *     `countDistinct`, so [[ExactDistinctLong]] (a typed Aggregator UDAF)
   *     accumulates the exact set single-pass, matching the reference's
@@ -507,13 +508,27 @@ object StreamingAgg {
       graft.sources.Sources.upsertJdbc(
         batch.withColumn("created_at", lit(batchId)), url, table, keyCols)
 
-  /** foreachBatch sink body: last-write-wins upsert of a micro-batch into a
-    * parquet target keyed by (window_start, event_type) — the relational
-    * equivalent of the reference's `INSERT ... ON CONFLICT DO UPDATE`
-    * (upsert_aggregation.sql:1-19). On a lakehouse table this would be a
-    * single `MERGE INTO`; over plain parquet we rewrite the (tiny) aggregate
-    * table — correct because the aggregate cardinality is bounded by
-    * hours x event_types, not by event volume.
+  /** foreachBatch sink body: upsert of a micro-batch into a parquet target
+    * keyed by (window_start, event_type), the reference's `INSERT ... ON
+    * CONFLICT DO UPDATE SET ... = EXCLUDED` (upsert_aggregation.sql:1-19).
+    * The batch replaces its keys: every row of the served table whose key
+    * the batch holds is dropped and the batch's row takes its place, so the
+    * newest call wins for its keys, as EXCLUDED overwrites the stored row.
+    * Spark replays only the last uncommitted batch id and a replay writes
+    * the same rows, so this is the newest-`created_at`-per-key table while
+    * batch ids never go backwards; `created_at` is still written.
+    *
+    * The merge needs no shuffle. The batch holds at most hours x types
+    * rows, so it is collected once ([[replaceKeys]]) and its keys become a
+    * literal set: the served table is filtered against that set and
+    * unioned with the batch in one narrow `coalesce(1)` stage, with no
+    * exchange, sort or window. A batch that holds two rows for one key is
+    * rejected with `IllegalArgumentException` before anything is written;
+    * the update, complete and grace outputs never produce one. An empty
+    * batch still rewrites and swaps the table. On a lakehouse table this
+    * would be a single `MERGE INTO`; over plain parquet the (tiny)
+    * aggregate table is rewritten, which stays cheap because its
+    * cardinality is bounded by hours x event_types, not by event volume.
     */
   def upsertBatch(spark: SparkSession, batch: DataFrame, targetDir: String, batchId: Long): Unit = {
     // All path manipulation goes through the Hadoop FileSystem resolved for
@@ -538,21 +553,47 @@ object StreamingAgg {
       else if (fs.exists(old)) Some(targetDir + "_old")
       else None
 
-    val stamped = batch.withColumn("created_at", lit(batchId))
-    val merged = existingDir match {
-      case Some(dir) =>
-        Upsert.lastWriteWins(
-          spark.read.parquet(dir).unionByName(stamped),
-          keys = Seq("window_start", "event_type"),
-          version = Seq(col("created_at")))
-      case None => stamped
-    }
+    val merged = replaceKeys(spark, existingDir.map(spark.read.parquet(_)),
+      batch.withColumn("created_at", lit(batchId)))
     val tmp = new Path(targetDir + "_tmp")
-    // coalesce(1) is deliberate while the aggregate stays hours x types
-    // bounded (one small file per swap); a row-volume-bounded table would
-    // drop it and partition the target instead.
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    merged.write.mode("overwrite").parquet(tmp.toString)
     swapIn(fs, tmp, target, old, batchId)
+  }
+
+  /** The served table's key. */
+  private val ServedKey = Seq("window_start", "event_type")
+
+  /** The frame [[upsertBatch]] writes: `served` without the keys that
+    * `batch` holds, plus `batch`, in one partition. `batch` is evaluated
+    * here exactly once: its rows are collected, checked for a repeated key
+    * and re-planned as a local relation, so the write does not run the
+    * micro-batch's stateful stages a second time. The plan is a parquet
+    * scan, a filter against the batch's keys as a literal set, a union and
+    * a `coalesce(1)`: no exchange, sort or window. `coalesce(1)` is
+    * deliberate while the aggregate stays hours x types bounded (one small
+    * file per swap); a row-volume-bounded table would partition the target
+    * instead.
+    */
+  private[graft] def replaceKeys(spark: SparkSession, served: Option[DataFrame],
+      batch: DataFrame): DataFrame = {
+    val schema = batch.schema
+    val keyAt = ServedKey.map(schema.fieldIndex)
+    val rows = batch.collect()
+    val keys = rows.toSeq.map(r => keyAt.map(r.get))
+    keys.groupBy(identity).collectFirst { case (k, ks) if ks.length > 1 => (k, ks.length) }
+      .foreach { case (k, n) =>
+        throw new IllegalArgumentException(
+          s"upsertBatch: the batch holds $n rows for the key " +
+            ServedKey.zip(k).map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")"))
+      }
+    // cast: a null key value would otherwise be a NullType literal
+    def literal(k: Seq[Any]) =
+      struct(k.zip(ServedKey).map { case (v, c) => lit(v).cast(schema(c).dataType).as(c) }: _*)
+    // an empty batch gives an empty IN list, which the optimizer folds to
+    // an always-true filter and removes
+    val kept = served.map(_.filter(!struct(ServedKey.map(col): _*).isin(keys.map(literal): _*)))
+    val fresh = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    kept.fold(fresh)(_.unionByName(fresh)).coalesce(1)
   }
 
   /** Publish `tmp` as `target`, keeping the prior state on disk until the

@@ -95,6 +95,22 @@ class ExpressionEdgeSpec extends SparkTestBase {
     assert(bad.isNullAt(0))
   }
 
+  test("pq_encode / pq_lut compare and print by codebook content") {
+    // each build flattens the (memoized) codebooks into fresh arrays, so
+    // two builds hold equal arrays that are different objects
+    val build = SparkEntry.queries("ann_pq")
+    val (a, b) = (build(spark, sf), build(spark, sf))
+    assert(a.sameSemantics(b), "two builds of ann_pq must canonicalize alike")
+    // expression and exchange ids count up per build within one session;
+    // everything else in the dump must match
+    def dump(df: org.apache.spark.sql.DataFrame) =
+      PlanDump.text(df).replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+    val (da, db) = (dump(a), dump(b))
+    assert(da.contains("pq_encode") && da.contains("pq_lut"), da)
+    assert(!da.contains("[D@"), da)
+    assert(da == db, s"PlanDump texts differ:\n$da\n---\n$db")
+  }
+
   test("fnv1a64/mix64 match reference folds (codegen and SQL-registered paths)") {
     graft.functions.GraftFunctions.register(spark)
     // splitmix64 reference vector: mix(0) is the first value of the

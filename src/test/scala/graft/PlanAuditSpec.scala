@@ -928,4 +928,72 @@ class PlanAuditSpec extends SparkTestBase {
       assert(docScans <= 1, s"gate must not rescan documents:\n$s")
     } finally graft.operators.DistributedRank.release(spark)
   }
+
+  /** The hourly table over the test events, as a served parquet table. */
+  private lazy val servedParquet: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_served").toString + "/agg"
+    graft.operators.HourlyAggregation(Tables.events(spark, sf))
+      .withColumn("created_at", org.apache.spark.sql.functions.lit(-1L))
+      .write.parquet(dir)
+    dir
+  }
+
+  /** Every node of the final plan, descending into adaptive query stages. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] =
+    p.collect {
+      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+      case s: QueryStageExec => allNodes(s.plan)
+      case n => Seq(n)
+    }.flatten
+
+  test("upsertBatch's merge is one narrow stage: no exchange, sort or window") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val served = spark.read.parquet(servedParquet)
+    val batch = served.orderBy(col("window_start").desc, col("event_type")).limit(3)
+      .withColumn("event_count", col("event_count") + 1)
+      .withColumn("created_at", lit(7L))
+    val merged = graft.streaming.StreamingAgg.replaceKeys(spark, Some(served), batch)
+    val plan = finalPlan(merged)
+    val nodes = allNodes(plan).map(_.nodeName)
+    assert(allExchanges(plan).isEmpty, s"the merge must not shuffle:\n$plan")
+    assert(!nodes.exists(n => n.contains("Window") || n.contains("Sort") ||
+      n.contains("Exchange")), s"the merge must not sort or window:\n$plan")
+    assert(nodes.contains("Coalesce") && nodes.contains("Union"), plan.toString)
+    assert(merged.count() == served.count())
+    assert(merged.filter(col("created_at") === 7L).count() == 3L)
+    // an empty batch keeps every served row and plans no filter at all
+    val unchanged = graft.streaming.StreamingAgg.replaceKeys(spark, Some(served), batch.limit(0))
+    val emptyPlan = finalPlan(unchanged)
+    assert(!allNodes(emptyPlan).exists(_.nodeName == "Filter"), emptyPlan.toString)
+    assert(unchanged.count() == served.count())
+  }
+
+  test("Q3-Q5 sort in one partition: one hash exchange, no range exchange") {
+    import graft.queries.ReadQueries
+    val served = spark.read.parquet(servedParquet)
+    for ((name, q) <- Seq(
+        "getStats" -> ReadQueries.getStats(served),
+        "getEventTypes" -> ReadQueries.getEventTypes(served),
+        "groupedSum" -> ReadQueries.groupedSum(served))) {
+      val plan = finalPlan(q)
+      val parts = allExchanges(plan).map(_.outputPartitioning.toString)
+      assert(!parts.exists(_.contains("rangepartitioning")), s"$name:\n$plan")
+      assert(parts.count(_.contains("hashpartitioning")) == 1 && parts.size == 1,
+        s"$name: expected exactly one hash exchange:\n$plan")
+    }
+  }
+
+  test("Q1-Q2 stay a top-K: TakeOrderedAndProject, no exchange, no coalesce") {
+    import graft.queries.ReadQueries
+    val served = spark.read.parquet(servedParquet)
+    for ((name, q) <- Seq(
+        "getAggregations" -> ReadQueries.getAggregations(served,
+          eventType = Some("purchase"), limit = 20, offset = 5),
+        "getLatest" -> ReadQueries.getLatest(served, 10))) {
+      val plan = finalPlan(q)
+      val nodes = allNodes(plan).map(_.nodeName)
+      assert(nodes.head == "TakeOrderedAndProject", s"$name:\n$plan")
+      assert(allExchanges(plan).isEmpty && !nodes.contains("Coalesce"), s"$name:\n$plan")
+    }
+  }
 }

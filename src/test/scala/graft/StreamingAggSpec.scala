@@ -709,6 +709,56 @@ class StreamingAggSpec extends SparkTestBase {
     assert(served() == Set("click", "buy"), "the next call must merge S")
   }
 
+  /** A served table at a fresh temp path, and one-event hourly batches. */
+  private def servedDir(name: String): String =
+    new java.io.File(java.nio.file.Files.createTempDirectory(name).toFile, "agg").getAbsolutePath
+  private def hourOf(id: Long, t: String, typ: String, v: Double = 1.0) =
+    HourlyAggregation(Seq(ev(id, t, 1, typ, v)).toDF())
+  private def servedRows(target: String): Set[org.apache.spark.sql.Row] =
+    spark.read.parquet(target).collect().toSet
+
+  test("upsertBatch evaluates the batch frame once") {
+    val target = servedDir("graft_upsert_once")
+    StreamingAgg.upsertBatch(spark, hourOf(1, "2024-01-01 10:05:00", "click"), target, 0)
+    val rows = spark.sparkContext.longAccumulator("upsert_batch_rows")
+    val bump = udf((n: Long) => { rows.add(1); n }).asNondeterministic()
+    val batch = HourlyAggregation(Seq(
+      ev(2, "2024-01-01 10:15:00", 2, "click", 3.5),
+      ev(3, "2024-01-01 11:05:00", 1, "view", 1.0),
+      ev(4, "2024-01-01 12:05:00", 1, "buy", 2.0)).toDF())
+      .withColumn("event_count", bump(col("event_count")))
+    StreamingAgg.upsertBatch(spark, batch, target, batchId = 1)
+    assert(rows.value == 3L, s"the batch frame ran ${rows.value} row evaluations for 3 rows")
+    assert(spark.read.parquet(target).count() == 3L)
+  }
+
+  test("upsertBatch rejects a batch with two rows for one key and writes nothing") {
+    val target = servedDir("graft_upsert_dup")
+    StreamingAgg.upsertBatch(spark, hourOf(1, "2024-01-01 10:05:00", "click"), target, 0)
+    val before = servedRows(target)
+    val dup = hourOf(2, "2024-01-01 10:15:00", "click", 2.0)
+      .unionByName(hourOf(3, "2024-01-01 10:25:00", "click", 3.0))
+      .unionByName(hourOf(4, "2024-01-01 11:05:00", "view"))
+    val e = intercept[IllegalArgumentException](
+      StreamingAgg.upsertBatch(spark, dup, target, batchId = 1))
+    assert(e.getMessage.contains("window_start=2024-01-01 10:00:00") &&
+      e.getMessage.contains("event_type=click"), e.getMessage)
+    assert(servedRows(target) == before, "the served table must be unchanged")
+  }
+
+  test("upsertBatch: a later call with a lower batchId overwrites its keys, keeps the rest") {
+    val target = servedDir("graft_upsert_lower_id")
+    StreamingAgg.upsertBatch(spark, hourOf(1, "2024-01-01 10:05:00", "click", 2.0)
+      .unionByName(hourOf(2, "2024-01-01 11:05:00", "view", 5.0)), target, batchId = 5)
+    StreamingAgg.upsertBatch(spark, HourlyAggregation(Seq(
+      ev(3, "2024-01-01 10:15:00", 1, "click", 7.0),
+      ev(4, "2024-01-01 10:25:00", 2, "click", 1.0)).toDF()), target, batchId = 3)
+    val got = spark.read.parquet(target)
+      .select("event_type", "event_count", "total_value", "created_at")
+      .as[(String, Long, Double, Long)].collect().toSet
+    assert(got == Set(("click", 2L, 8.0, 3L), ("view", 1L, 5.0, 5L)), got.toString)
+  }
+
   test("stateful streaming transitions match the batch lead() operator across batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Timestamp, String)]

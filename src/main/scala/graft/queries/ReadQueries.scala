@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * Q3–Q5 end in one row per event type, so they `coalesce(1)` after the
   * grouped aggregate and sort in that one partition: a global sort would
   * add a sampling job and a range exchange to order at most a handful of
-  * rows, while the aggregate below the coalesce still runs distributed.
+  * rows. The partial aggregate still runs across tasks; the final merge of
+  * at most one row per event type runs in the one coalesced task.
   */
 object ReadQueries {
 

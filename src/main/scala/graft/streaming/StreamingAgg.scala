@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.HourlyAggregation
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -518,17 +518,21 @@ object StreamingAgg {
     * the same rows, so this is the newest-`created_at`-per-key table while
     * batch ids never go backwards; `created_at` is still written.
     *
-    * The merge needs no shuffle. The batch holds at most hours x types
-    * rows, so it is collected once ([[replaceKeys]]) and its keys become a
-    * literal set: the served table is filtered against that set and
-    * unioned with the batch in one narrow `coalesce(1)` stage, with no
-    * exchange, sort or window. A batch that holds two rows for one key is
-    * rejected with `IllegalArgumentException` before anything is written;
-    * the update, complete and grace outputs never produce one. An empty
-    * batch still rewrites and swaps the table. On a lakehouse table this
-    * would be a single `MERGE INTO`; over plain parquet the (tiny)
-    * aggregate table is rewritten, which stays cheap because its
-    * cardinality is bounded by hours x event_types, not by event volume.
+    * The merge needs no shuffle. The batch is persisted and evaluated
+    * once; only its keys are collected ([[withReplacedKeys]]). The served
+    * table is filtered against that key set, shipped as a broadcast
+    * variable, and unioned with the cached batch in one narrow
+    * `coalesce(1)` stage, with no exchange, sort or window. The plan and
+    * the task binary stay the same size however many keys the batch holds,
+    * so a complete-mode batch that repeats every key costs one more
+    * broadcast, not a plan with one expression per key. A batch that holds
+    * two rows for one key is rejected with `IllegalArgumentException`
+    * before anything is written; the update, complete and grace outputs
+    * never produce one. An empty batch still rewrites and swaps the table.
+    * On a lakehouse table this would be a single `MERGE INTO`; over plain
+    * parquet the (tiny) aggregate table is rewritten, which stays cheap
+    * because its cardinality is bounded by hours x event_types, not by
+    * event volume.
     */
   def upsertBatch(spark: SparkSession, batch: DataFrame, targetDir: String, batchId: Long): Unit = {
     // All path manipulation goes through the Hadoop FileSystem resolved for
@@ -553,47 +557,49 @@ object StreamingAgg {
       else if (fs.exists(old)) Some(targetDir + "_old")
       else None
 
-    val merged = replaceKeys(spark, existingDir.map(spark.read.parquet(_)),
-      batch.withColumn("created_at", lit(batchId)))
     val tmp = new Path(targetDir + "_tmp")
-    merged.write.mode("overwrite").parquet(tmp.toString)
+    withReplacedKeys(spark, existingDir.map(spark.read.parquet(_)),
+      batch.withColumn("created_at", lit(batchId))) { merged =>
+      merged.write.mode("overwrite").parquet(tmp.toString)
+    }
     swapIn(fs, tmp, target, old, batchId)
   }
 
   /** The served table's key. */
   private val ServedKey = Seq("window_start", "event_type")
 
-  /** The frame [[upsertBatch]] writes: `served` without the keys that
-    * `batch` holds, plus `batch`, in one partition. `batch` is evaluated
-    * here exactly once: its rows are collected, checked for a repeated key
-    * and re-planned as a local relation, so the write does not run the
-    * micro-batch's stateful stages a second time. The plan is a parquet
-    * scan, a filter against the batch's keys as a literal set, a union and
-    * a `coalesce(1)`: no exchange, sort or window. `coalesce(1)` is
-    * deliberate while the aggregate stays hours x types bounded (one small
-    * file per swap); a row-volume-bounded table would partition the target
-    * instead.
+  /** Hands `use` the frame [[upsertBatch]] writes: `served` without the
+    * keys that `batch` holds, plus `batch`, in one partition. `batch` is
+    * persisted for the duration of `use` and evaluated once, by the job
+    * that collects its keys, so the write does not run the micro-batch's
+    * stateful stages a second time. The keys are checked for a repeat and
+    * broadcast as a set that a filter on `served` probes: the plan holds
+    * no per-key expression and no batch row, only a parquet scan, that
+    * filter, a union with the cached batch and a `coalesce(1)`, with no
+    * exchange, sort or window. `coalesce(1)` is deliberate while the
+    * aggregate stays hours x types bounded (one small file per swap); a
+    * row-volume-bounded table would partition the target instead.
     */
-  private[graft] def replaceKeys(spark: SparkSession, served: Option[DataFrame],
-      batch: DataFrame): DataFrame = {
-    val schema = batch.schema
-    val keyAt = ServedKey.map(schema.fieldIndex)
-    val rows = batch.collect()
-    val keys = rows.toSeq.map(r => keyAt.map(r.get))
-    keys.groupBy(identity).collectFirst { case (k, ks) if ks.length > 1 => (k, ks.length) }
-      .foreach { case (k, n) =>
+  private[graft] def withReplacedKeys[T](spark: SparkSession, served: Option[DataFrame],
+      batch: DataFrame)(use: DataFrame => T): T = {
+    val fresh = batch.persist()
+    try {
+      val keys = fresh.select(ServedKey.map(col): _*).collect()
+      // a java.util.HashSet: it serializes about three times faster than a
+      // Scala Set, which shows once a complete-mode batch holds every key
+      val keySet = new java.util.HashSet[Row](2 * keys.length)
+      keys.find(k => !keySet.add(k)).foreach { k =>
         throw new IllegalArgumentException(
-          s"upsertBatch: the batch holds $n rows for the key " +
-            ServedKey.zip(k).map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")"))
+          s"upsertBatch: the batch holds ${keys.count(_ == k)} rows for the key " +
+            ServedKey.zip(k.toSeq).map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")"))
       }
-    // cast: a null key value would otherwise be a NullType literal
-    def literal(k: Seq[Any]) =
-      struct(k.zip(ServedKey).map { case (v, c) => lit(v).cast(schema(c).dataType).as(c) }: _*)
-    // an empty batch gives an empty IN list, which the optimizer folds to
-    // an always-true filter and removes
-    val kept = served.map(_.filter(!struct(ServedKey.map(col): _*).isin(keys.map(literal): _*)))
-    val fresh = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    kept.fold(fresh)(_.unionByName(fresh)).coalesce(1)
+      val replaced = spark.sparkContext.broadcast(keySet)
+      try {
+        val kept = udf((k: Row) => !replaced.value.contains(k))
+        use(served.map(_.filter(kept(struct(ServedKey.map(col): _*))))
+          .fold(fresh)(_.unionByName(fresh)).coalesce(1))
+      } finally replaced.destroy()
+    } finally fresh.unpersist()
   }
 
   /** Publish `tmp` as `target`, keeping the prior state on disk until the

@@ -952,20 +952,37 @@ class PlanAuditSpec extends SparkTestBase {
     val batch = served.orderBy(col("window_start").desc, col("event_type")).limit(3)
       .withColumn("event_count", col("event_count") + 1)
       .withColumn("created_at", lit(7L))
-    val merged = graft.streaming.StreamingAgg.replaceKeys(spark, Some(served), batch)
-    val plan = finalPlan(merged)
-    val nodes = allNodes(plan).map(_.nodeName)
-    assert(allExchanges(plan).isEmpty, s"the merge must not shuffle:\n$plan")
-    assert(!nodes.exists(n => n.contains("Window") || n.contains("Sort") ||
-      n.contains("Exchange")), s"the merge must not sort or window:\n$plan")
-    assert(nodes.contains("Coalesce") && nodes.contains("Union"), plan.toString)
-    assert(merged.count() == served.count())
-    assert(merged.filter(col("created_at") === 7L).count() == 3L)
-    // an empty batch keeps every served row and plans no filter at all
-    val unchanged = graft.streaming.StreamingAgg.replaceKeys(spark, Some(served), batch.limit(0))
-    val emptyPlan = finalPlan(unchanged)
-    assert(!allNodes(emptyPlan).exists(_.nodeName == "Filter"), emptyPlan.toString)
-    assert(unchanged.count() == served.count())
+    graft.streaming.StreamingAgg.withReplacedKeys(spark, Some(served), batch) { merged =>
+      val plan = finalPlan(merged)
+      val nodes = allNodes(plan).map(_.nodeName)
+      assert(allExchanges(plan).isEmpty, s"the merge must not shuffle:\n$plan")
+      assert(!nodes.exists(n => n.contains("Window") || n.contains("Sort") ||
+        n.contains("Exchange")), s"the merge must not sort or window:\n$plan")
+      assert(nodes.contains("Coalesce") && nodes.contains("Union") &&
+        nodes.contains("InMemoryTableScan"), plan.toString)
+      assert(merged.count() == served.count())
+      assert(merged.filter(col("created_at") === 7L).count() == 3L)
+    }
+    // an empty batch keeps every served row
+    graft.streaming.StreamingAgg.withReplacedKeys(spark, Some(served), batch.limit(0)) { unchanged =>
+      assert(unchanged.count() == served.count())
+    }
+  }
+
+  test("upsertBatch's merge plan does not grow with the batch's keys") {
+    import org.apache.spark.sql.functions.lit
+    val served = spark.read.parquet(servedParquet)
+    val keys = served.count()
+    assert(keys > 100L)
+    def planText(n: Long) = graft.streaming.StreamingAgg.withReplacedKeys(spark, Some(served),
+        served.withColumn("created_at", lit(7L)).limit(n.toInt)) { merged =>
+      assert(merged.count() == keys)
+      merged.queryExecution.optimizedPlan.toString
+        .replaceAll("#\\d+L?", "#").replaceAll("Limit \\d+", "Limit n")
+    }
+    // a batch that covers the served table plans like a one-key batch
+    val (all, one) = (planText(keys), planText(1))
+    assert(all == one, s"$all\n!=\n$one")
   }
 
   test("Q3-Q5 sort in one partition: one hash exchange, no range exchange") {

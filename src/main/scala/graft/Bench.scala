@@ -21,7 +21,7 @@ object Bench {
     // optional arg: comma-separated query subset (local iteration only —
     // recorded artifacts always come from full runs)
     val queries = Harness.select(args.headOption)
-    val spark = Harness.session()
+    val spark = Harness.session(Harness.cpus)
     Harness.warmup(spark, sfDir)
 
     // Three passes, per-query MIN over SUCCESSFUL passes: this host shows

@@ -1,72 +1,79 @@
 package graft
 
 import graft.functions.{CosineSim, DotProduct, Fnv1a64, Mix64, RollingHash, SimHash64, WinnowStats, WordShingles}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.SPARK_DOC_ROOT
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point: installs the engine's native
-  * expressions into any session at build time —
+/** SparkSessionExtensions entry point: installs the engine's 8 native
+  * expressions as SQL functions of a session when it is built —
+  * `rolling_hash`, `simhash64`, `dot_product`, `cosine_sim`, `fnv1a64`,
+  * `mix64`, `winnow_stats` and `word_shingles`.
+  *
+  * [[Harness.session]] installs it, so every main and the test session
+  * have them. Any other session needs it named at build time:
   *
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
-  *   // or: --conf spark.sql.extensions=graft.GraftExtensions
+  *   --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * after which `rolling_hash`, `simhash64` and `word_shingles` are plain SQL
-  * functions cluster-wide. (`GraftFunctions.register` does the same
-  * per-session imperatively; this is the deployment-grade wiring.)
+  * The Column API (`GraftColumns`) builds the same expressions directly
+  * and needs no installation.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    // Optimizer rule: cost-order Filter conjuncts so cheap comparisons
-    // short-circuit ahead of regex/edit-distance/hash predicates.
-    e.injectOptimizerRule(_ => graft.plans.PredicateCostReorder)
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      exprs => RollingHash(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      exprs => SimHash64(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      exprs => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      exprs => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("fnv1a64"),
-      new ExpressionInfo(classOf[Fnv1a64].getName, "fnv1a64"),
-      exprs => Fnv1a64(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("mix64"),
-      new ExpressionInfo(classOf[Mix64].getName, "mix64"),
-      exprs => Mix64(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("winnow_stats"),
-      new ExpressionInfo(classOf[WinnowStats].getName, "winnow_stats"),
-      exprs =>
-        if (exprs.length == 1) WinnowStats(exprs.head, 8, 4)
-        else {
-          def toInt(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
-            e.eval(null) match {
-              case i: Int => i
-              case l: Long => l.toInt
-            }
-          WinnowStats(exprs.head, toInt(exprs(1)), toInt(exprs(2)))
-        }))
-    e.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      exprs =>
-        if (exprs.length == 1) WordShingles(exprs.head, 3)
-        else WordShingles(exprs.head, exprs(1).eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-        })))
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.natives.foreach { n =>
+      e.injectFunction((FunctionIdentifier(n.name),
+        new ExpressionInfo(n.cls.getName, n.name), n.checked))
+    }
+}
+
+object GraftExtensions {
+
+  /** One native SQL function: its name, the expression class behind it,
+    * the argument counts it accepts, and its builder. A call with any
+    * other count fails analysis with `WRONG_NUM_ARGS`, as a built-in does
+    * (Spark's own `QueryCompilationErrors` is private to Spark).
+    */
+  final case class Native(name: String, cls: Class[_ <: Expression], arities: Seq[Int])(
+      build: Seq[Expression] => Expression) {
+    def checked(args: Seq[Expression]): Expression =
+      if (arities.contains(args.length)) build(args)
+      else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+        "functionName" -> s"`$name`",
+        "expectedNum" ->
+          (if (arities.size == 1) arities.head.toString else arities.mkString("[", ", ", "]")),
+        "actualNum" -> args.length.toString,
+        "docroot" -> SPARK_DOC_ROOT))
   }
+
+  /** The one table of native functions. */
+  val natives: Seq[Native] = Seq(
+    Native("rolling_hash", classOf[RollingHash], Seq(1))(a => RollingHash(a(0))),
+    Native("simhash64", classOf[SimHash64], Seq(1))(a => SimHash64(a(0))),
+    Native("dot_product", classOf[DotProduct], Seq(2))(a => DotProduct(a(0), a(1))),
+    Native("cosine_sim", classOf[CosineSim], Seq(2))(a => CosineSim(a(0), a(1))),
+    Native("fnv1a64", classOf[Fnv1a64], Seq(1))(a => Fnv1a64(a(0))),
+    Native("mix64", classOf[Mix64], Seq(1))(a => Mix64(a(0))),
+    Native("winnow_stats", classOf[WinnowStats], Seq(1, 3)) {
+      case Seq(text) => WinnowStats(text, 8, 4)
+      case Seq(text, k, w) =>
+        WinnowStats(text, intLiteral("winnow_stats", "k", k), intLiteral("winnow_stats", "w", w))
+    },
+    Native("word_shingles", classOf[WordShingles], Seq(1, 2)) {
+      case Seq(text) => WordShingles(text, 3)
+      case Seq(text, k) => WordShingles(text, intLiteral("word_shingles", "k", k))
+    })
+
+  /** A constant integer argument, or `NON_FOLDABLE_ARGUMENT` naming the
+    * function: a column, a null or a non-integer cannot size the window.
+    */
+  private def intLiteral(fn: String, param: String, e: Expression): Int =
+    (if (e.foldable) e.eval() else null) match {
+      case i: Int => i
+      case l: Long if l.isValidInt => l.toInt
+      case _ => throw new AnalysisException("NON_FOLDABLE_ARGUMENT",
+        Map("funcName" -> s"`$fn`", "paramName" -> s"`$param`", "paramType" -> "\"INT\""))
+    }
 }

@@ -1,11 +1,11 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL-first entry point: registers the harness tables as temp views and
-  * the derived `hourly_aggregations` table, plus the native functions —
-  * after which the whole engine surface is reachable from `spark.sql`:
+  * the derived `hourly_aggregations` table. With the native functions that
+  * [[GraftExtensions]] installs in the session, the whole engine surface is
+  * then reachable from `spark.sql`:
   *
   * {{{
   *   GraftSql.registerViews(spark, "/root/testdata/sf0.01")
@@ -20,7 +20,6 @@ object GraftSql {
     "lineitem", "events", "documents", "embeddings")
 
   def registerViews(spark: SparkSession, dir: String): Unit = {
-    GraftFunctions.register(spark)
     tableNames.foreach { t =>
       val df: DataFrame = t match {
         case "events" => Tables.events(spark, dir)

@@ -16,11 +16,16 @@ object Harness {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** `local[cpus]` with one shuffle partition per core, AQE on, UTC, no UI. */
-  def session(): SparkSession = {
-    val n = cpus.toString
+  /** The one session recipe, for the mains (`cores` = [[cpus]]), the test
+    * suites and the streaming restart child: `local[cores]` with one
+    * shuffle partition per core, AQE on, UTC, no UI, and the native SQL
+    * functions of [[GraftExtensions]].
+    */
+  def session(cores: Int): SparkSession = {
+    val n = cores.toString
     val spark = SparkSession.builder()
       .master(s"local[$n]")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", n)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

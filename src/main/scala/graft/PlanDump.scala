@@ -17,7 +17,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val queries = Harness.select(args.lift(3))
-    val spark = Harness.session()
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     for ((name, fn) <- queries)
       Harness.run(spark) {

@@ -20,7 +20,7 @@ object Profile {
     }
     val sfDir = args(0)
     val queries = Harness.select(Some(args(1)))
-    val spark = Harness.session()
+    val spark = Harness.session(Harness.cpus)
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger

@@ -29,7 +29,7 @@ object ScaleSmoke {
   private val firstRunOnly = Set("dedup_clusters", "ann_ivf", "minhash_lsh_pairs")
 
   def main(args: Array[String]): Unit = {
-    val spark = Harness.session()
+    val spark = Harness.session(Harness.cpus)
 
     // (op, scale) -> (t1, t2, rows)
     val results = ArrayBuffer[(String, Int, Double, Double, Long)]()

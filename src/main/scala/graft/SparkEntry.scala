@@ -493,12 +493,10 @@ object SparkEntry {
         |                     i -> CAST(ascii(text[i]) AS BIGINT))),
         |    (a, b) -> (a * 31 + b) % 1000000007) AS fingerprint
         |FROM documents WHERE $asciiGuard ORDER BY doc_id""".stripMargin),
-    // Same semantics through SQL TEXT with the registered native
-    // expression — proves the custom-Expression surface is reachable from
-    // the SQL parser (GraftFunctions.register / GraftExtensions), not just
-    // the Column API.
+    // Same semantics through SQL TEXT with the native expression that the
+    // session's GraftExtensions installed — proves the custom-Expression
+    // surface is reachable from the SQL parser, not just the Column API.
     spec("doc_fingerprints_sql", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       // query-scoped view name (see above_avg_balance_sql note)
       Tables.documents(s, dir).createOrReplaceTempView("graft_q_documents")
       s.sql("""SELECT doc_id, rolling_hash(text) AS fingerprint
@@ -1456,7 +1454,6 @@ object SparkEntry {
     // bounded to the first 2000 vectors so the quadratic stays fixed-size;
     // the LSH/IVF queries are the corpus-scale candidates path.
     spec("embedding_near_dups", (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val sub = Tables.embeddings(s, dir).filter(col("vec_id") < 2000)
       // float->double cast BEFORE the join: casting inside the pair
       // projection re-materializes the array per pair (measured 6.6x).

@@ -7,7 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name subset (local iteration)
     val queries = Harness.select(args.lift(2))
-    val spark = Harness.session()
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     for ((name, fn) <- queries)
       Harness.run(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")

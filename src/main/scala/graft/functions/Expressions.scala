@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
@@ -1536,40 +1535,5 @@ object WinnowStats {
       idx += 1
     }
     java.util.Arrays.copyOf(out, nOut)
-  }
-}
-
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", {
-        case Seq(text) => WordShingles(text, 3)
-        case Seq(text, k) => WordShingles(text, k.eval(null) match {
-          case i: Int => i
-          case l: Long => l.toInt
-        })
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fnv1a64", exprs => Fnv1a64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mix64", exprs => Mix64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_stats", {
-        case Seq(text) => WinnowStats(text, 8, 4)
-        case Seq(text, k, w) =>
-          def toInt(e: Expression): Int = e.eval(null) match {
-            case i: Int => i
-            case l: Long => l.toInt
-          }
-          WinnowStats(text, toInt(k), toInt(w))
-      }, "built-in")
   }
 }

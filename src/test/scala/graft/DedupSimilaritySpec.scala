@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{GraftFunctions, RollingHash, SimHash64}
+import graft.functions.RollingHash
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,6 @@ class DedupSimilaritySpec extends SparkTestBase {
   private lazy val emb = Tables.embeddings(spark, sf)
 
   test("rolling_hash native expression matches the reference Scala fold") {
-    GraftFunctions.register(spark)
     val rows = docs.limit(20)
       .select(col("text"), expr("rolling_hash(text)").as("h"))
       .collect()
@@ -25,7 +24,6 @@ class DedupSimilaritySpec extends SparkTestBase {
   }
 
   test("simhash: identical token arrays get identical fingerprints; perturbation stays near") {
-    GraftFunctions.register(spark)
     val df = Seq(
       ("a b c d e f g h i j k l m n o p", 1),
       ("a b c d e f g h i j k l m n o p", 2),     // identical

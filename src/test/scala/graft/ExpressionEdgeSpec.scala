@@ -112,7 +112,6 @@ class ExpressionEdgeSpec extends SparkTestBase {
   }
 
   test("fnv1a64/mix64 match reference folds (codegen and SQL-registered paths)") {
-    graft.functions.GraftFunctions.register(spark)
     // splitmix64 reference vector: mix(0) is the first value of the
     // well-known splitmix64 stream seeded at 0
     assert(graft.functions.Mix64.mix(0L) == 0xE220A8397B1DCDAFL)
@@ -154,8 +153,33 @@ class ExpressionEdgeSpec extends SparkTestBase {
     }
   }
 
+  test("native SQL functions reject a wrong arity or a non-literal size at analysis") {
+    val docs = Seq(("a b c d e", 1L)).toDF("text", "doc_id")
+      .withColumn("v", expr("array(1.0D, 2.0D)"))
+    def rejected(sql: String, condition: String, fn: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](docs.selectExpr(sql))
+      assert(e.getCondition.startsWith(condition), s"$sql: ${e.getMessage}")
+      assert(e.getMessage.contains(s"`$fn`"), s"$sql: ${e.getMessage}")
+    }
+    rejected("rolling_hash(text, 1)", "WRONG_NUM_ARGS", "rolling_hash")
+    rejected("word_shingles(text, 3, 9)", "WRONG_NUM_ARGS", "word_shingles")
+    rejected("dot_product(v)", "WRONG_NUM_ARGS", "dot_product")
+    rejected("winnow_stats(text, 8)", "WRONG_NUM_ARGS", "winnow_stats")
+    rejected("mix64()", "WRONG_NUM_ARGS", "mix64")
+    rejected("word_shingles(text, doc_id)", "NON_FOLDABLE_ARGUMENT", "word_shingles")
+    rejected("word_shingles(text, 'x')", "NON_FOLDABLE_ARGUMENT", "word_shingles")
+    rejected("word_shingles(text, NULL)", "NON_FOLDABLE_ARGUMENT", "word_shingles")
+    rejected("winnow_stats(text, 8, doc_id)", "NON_FOLDABLE_ARGUMENT", "winnow_stats")
+    // every accepted arity still builds, a BIGINT literal included
+    val ok = docs.selectExpr("size(word_shingles(text))", "size(word_shingles(text, 2))",
+      "size(word_shingles(text, CAST(4 AS BIGINT)))", "winnow_stats(text) = winnow_stats(text, 8, 4)")
+      .head()
+    assert(ok.getInt(0) == 3 && ok.getInt(1) == 4 && ok.getInt(2) == 2 && ok.getBoolean(3))
+  }
+
   test("Column-level API works with no function registration (fresh analyzer path)") {
-    // GraftColumns must not depend on GraftFunctions.register having run.
+    // GraftColumns builds its expressions directly, not through the
+    // session's function registry.
     val out = Seq((Seq(3.0, 4.0), Seq(3.0, 4.0))).toDF("a", "b")
       .select(GraftColumns.cosineSim(col("a"), col("b")).as("sim"))
       .as[Double].head

@@ -37,6 +37,14 @@ class HarnessSpec extends SparkTestBase {
     assert(unpinned())
   }
 
+  test("session() installs every native SQL function, in new sessions too") {
+    // the test session is Harness.session(4); nothing here registers
+    val names = GraftExtensions.natives.map(_.name)
+    assert(names.size == 8 && names.distinct == names)
+    for (s <- Seq(spark, spark.newSession()); n <- names)
+      assert(s.catalog.functionExists(n), s"$n is not a function of $s")
+  }
+
   test("session() is UTC with one shuffle partition per CPU") {
     // getOrCreate hands back the shared test session with the harness's
     // SQL settings applied: restore them for the suites that follow
@@ -47,7 +55,7 @@ class HarnessSpec extends SparkTestBase {
       // start from other values so the assertions see session() set them
       spark.conf.set("spark.sql.shuffle.partitions", (Harness.cpus + 1).toString)
       spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-      val s = Harness.session()
+      val s = Harness.session(Harness.cpus)
       assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
       assert(s.conf.get("spark.sql.shuffle.partitions") == Harness.cpus.toString)
     } finally before.foreach {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingAgg
-import org.apache.spark.sql.SparkSession
 
 /** Child-process entry for the cross-JVM streaming restart spec.
   *
@@ -11,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   * replay specs can't prove that — a restarted query inside one JVM shares
   * the SparkSession, the loaded state store providers and every static
   * cache with its predecessor. This main is launched by StreamingAggSpec
-  * as a separate `java` process: it builds its own SparkSession, runs the
-  * windowed aggregation from a file source with a durable checkpoint into
-  * the idempotent LWW parquet sink, drains what's available, then HALTS
+  * as a separate `java` process: it builds its own SparkSession
+  * ([[Harness.session]] on 4 cores), runs the windowed aggregation from a
+  * file source with a durable checkpoint into the idempotent LWW parquet
+  * sink, drains what's available, then HALTS
   * (no query.stop(), no SparkSession.stop(), shutdown hooks skipped) so
   * everything the next incarnation knows must come from the checkpoint
   * and sink directories on disk.
@@ -21,13 +21,7 @@ import org.apache.spark.sql.SparkSession
 object RestartHarness {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, ckptDir, targetDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-restart-child")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val schema = spark.read.parquet(srcDir).schema

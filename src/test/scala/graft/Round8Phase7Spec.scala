@@ -176,7 +176,6 @@ class Round8Phase7Spec extends SparkTestBase {
   }
 
   test("winnow_stats is reachable from SQL text (parser path)") {
-    graft.functions.GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT winnow_stats('aaaaaaaaaaaaaaaaaaaa') AS ws").collect()(0)
       .getSeq[Long](0)

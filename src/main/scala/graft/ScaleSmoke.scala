@@ -285,8 +285,8 @@ object ScaleSmoke {
             .withColumn("text", lit("")).withColumn("n_chars", lit(0L)))
           .count())
       // round-9 session: multiple-testing / robust / sequence additions.
-      // bh_fdr is one (stratum,user) reduction + a 2B-counter wide agg
-      // per stratum; ar2/max_burst fold calendar-bounded grids;
+      // bh_fdr is one (stratum,user) reduction + one aggregate over B
+      // rows per unit; ar2/max_burst fold calendar-bounded grids;
       // hodges_lehmann's pair frame is observed-hours² (flat when the
       // generator densifies a fixed span, quadratic only in the
       // CALENDAR); ransac scores a broadcast |types|·B model frame;

@@ -5126,7 +5126,8 @@ dcrouted AS (
       graft.operators.SeqMining.frequentSequences(Tables.events(s, dir)),
       graft.operators.SeqMining.frequentSequencesOracleSql),
     // Fisher randomization test of the A/B revenue contrast: 64 seeded
-    // label re-draws, cross-multiplied integer comparison, exact p.
+    // label re-draws as 64 rows per user, one aggregate per replicate,
+    // cross-multiplied integer comparison, exact p.
     spec("perm_test_ab", (s, dir) =>
       graft.operators.Randomization.permTestAb(Tables.events(s, dir)),
       graft.operators.Randomization.permTestAbOracleSql),
@@ -5172,7 +5173,9 @@ dcrouted AS (
       graft.operators.Privacy.ldpRandomizedResponse(Tables.events(s, dir)),
       graft.operators.Privacy.ldpRandomizedResponseOracleSql),
     // Benjamini–Hochberg step-up over a family of per-stratum
-    // randomization tests — exact p fractions, rank-arithmetic FDR.
+    // randomization tests — perm_test_ab's kernel grouped by stratum
+    // (one row per stratum and replicate), exact p fractions,
+    // rank-arithmetic FDR.
     spec("bh_fdr", (s, dir) =>
       graft.operators.MultipleTesting.bhFdr(Tables.events(s, dir)),
       graft.operators.MultipleTesting.bhFdrOracleSql),

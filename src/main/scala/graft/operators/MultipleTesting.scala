@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Mix64
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,10 +37,11 @@ import org.apache.spark.sql.functions._
   * so Spark DIV and DuckDB // agree).
   *
   * Scale: the unit reduction shuffles once on (type, daypart, user);
-  * the replicate statistics are ONE wide map-side-combined aggregate
-  * per stratum (2B+4 running longs — the [[Randomization]] shape); the
-  * BH pass is windows over the m-row stratum frame, bounded by the
-  * stratum catalog, never by corpus rows.
+  * the replicate statistics come from [[Randomization.exceedCounts]],
+  * one map-side-combined aggregate over one row per (stratum, replicate,
+  * unit), so the plan is the same size for any B; the BH pass is windows
+  * over the m-row stratum frame, bounded by the stratum catalog, never
+  * by corpus rows.
   */
 object MultipleTesting {
 
@@ -54,51 +55,18 @@ object MultipleTesting {
   def bhSeeds: Seq[Long] =
     (1 to B).map(b => Mix64.mix(0xB11771E5FD12L * b + 0x5EEDFACE7L))
 
-  private def replicateBit(user: Column, seed: Long): Column = {
-    import graft.functions.GraftColumns.mix64
-    pmod(mix64(mix64(user).bitwiseXOR(lit(seed))), lit(2L)).cast("long")
-  }
-
   /** One row per stratum, ordered by BH rank: the exact p fraction, the
     * step-up pass/reject flags and the adjusted p in micros.
     */
   def bhFdr(events: DataFrame): DataFrame = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
     val units = events
       .select(col("event_type"), expr("hour(ts) DIV 6").as("daypart"),
         col("user_id").as("u"), cents.as("c"))
       .groupBy(col("event_type"), col("daypart"), col("u"))
       .agg(sum(col("c")).as("x"))
-    val obsBit = pmod(col("u"), lit(2L)).cast("long")
-
-    val aggs =
-      Seq(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(obsBit).as("na"), sum(obsBit * col("x")).as("sa")) ++
-        bhSeeds.zipWithIndex.flatMap { case (seed, b) =>
-          val bit = replicateBit(col("u"), seed)
-          Seq(sum(bit).as(s"na_$b"), sum(bit * col("x")).as(s"sa_$b"))
-        }
-    val wide = units
-      .groupBy(col("event_type"), col("daypart"))
-      .agg(aggs.head, aggs.tail: _*)
-
-    def absT(na: Column, sa: Column): Column = {
-      val nb = (col("n") - na).cast(d38)
-      val sb = (col("sx") - sa).cast(d38)
-      abs(sa.cast(d38) * nb - sb * na.cast(d38))
-    }
-    def pairProd(na: Column): Column =
-      na.cast(d38) * (col("n") - na).cast(d38)
-
-    val exceed = (0 until B).map { b =>
-      when(absT(col(s"na_$b"), col(s"sa_$b")) * pairProd(col("na"))
-        >= absT(col("na"), col("sa")) * pairProd(col(s"na_$b")),
-        1L).otherwise(0L)
-    }.reduceLeft(_ + _)
-
-    val tested = wide
-      .withColumn("exceed_cnt", exceed)
+    val tested = Randomization
+      .exceedCounts(units, Seq("event_type", "daypart"), bhSeeds)
       .select(col("event_type"), col("daypart"),
         col("n").as("n_users"), col("na").as("n_a"),
         (col("n") - col("na")).as("n_b"),
@@ -134,50 +102,18 @@ object MultipleTesting {
       .orderBy(col("k_rank"))
   }
 
-  /** DuckDB replay: per-stratum unit frame, the shared HUGEINT splitmix64
-    * chain with the same seed literals, cross-multiplied exceed counts,
-    * then the identical window spelling of the step-up pass.
+  /** DuckDB replay: per-stratum unit frame,
+    * [[Randomization.exceedCountsOracleCtes]] keyed by stratum with the
+    * same seed literals, then the identical window spelling of the
+    * step-up pass.
     */
-  def bhFdrOracleSql: String = {
-    import graft.SketchOracles.{mixChain, U64 => u64}
-    val golden = "11400714819323198485::HUGEINT"
-    val seedRows = bhSeeds.zipWithIndex
-      .map { case (s, b) =>
-        val us = (BigInt(s) & ((BigInt(1) << 64) - 1)).toString
-        s"    ($b, $us::HUGEINT)"
-      }.mkString(",\n")
+  def bhFdrOracleSql: String =
     s"""WITH units AS (
   SELECT event_type, hour(ts) // 6 AS daypart, user_id AS u,
          CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100
                        AS DECIMAL(18,0))) AS BIGINT) AS x
   FROM events GROUP BY 1, 2, 3),
-sd(b, su) AS (VALUES
-$seedRows),
-u1 AS (SELECT event_type, daypart, u, x,
-  ((CASE WHEN u < 0 THEN CAST(u AS HUGEINT) + $u64
-         ELSE CAST(u AS HUGEINT) END) + $golden) % $u64 AS z0 FROM units),
-${mixChain("k1", "u1", Seq("event_type", "daypart", "u", "x"), "z0")},
-x1 AS (SELECT event_type, daypart, x, b,
-  (xor(mx, su) + $golden) % $u64 AS z0 FROM k14, sd),
-${mixChain("b1", "x1", Seq("event_type", "daypart", "x", "b"), "z0")},
-bits AS (SELECT event_type, daypart, x, b,
-  CAST(mx % 2 AS BIGINT) AS bit FROM b14),
-obs AS (SELECT event_type, daypart, count(*) AS n, sum(x) AS sx,
-  sum(((u % 2) + 2) % 2) AS na, sum((((u % 2) + 2) % 2) * x) AS sa
-  FROM units GROUP BY 1, 2),
-reps AS (SELECT event_type, daypart, b,
-  sum(bit) AS nab, sum(bit * x) AS sab
-  FROM bits GROUP BY 1, 2, 3),
-cmp AS (SELECT r.event_type, r.daypart,
-  CASE WHEN abs(CAST(r.sab AS HUGEINT) * (o.n - r.nab)
-              - CAST(o.sx - r.sab AS HUGEINT) * r.nab)
-            * (CAST(o.na AS HUGEINT) * (o.n - o.na))
-        >= abs(CAST(o.sa AS HUGEINT) * (o.n - o.na)
-              - CAST(o.sx - o.sa AS HUGEINT) * o.na)
-            * (CAST(r.nab AS HUGEINT) * (o.n - r.nab))
-       THEN 1 ELSE 0 END AS ex
-  FROM reps r JOIN obs o
-    ON r.event_type = o.event_type AND r.daypart = o.daypart),
+${Randomization.exceedCountsOracleCtes(Seq("event_type", "daypart"), bhSeeds)},
 tested AS (SELECT o.event_type, o.daypart,
   CAST(o.n AS BIGINT) AS n_users,
   CAST(o.na AS BIGINT) AS n_a,
@@ -209,5 +145,4 @@ SELECT k_rank, event_type, daypart, n_users, n_a, n_b, exceed_cnt,
   p_num, p_den, m_tests, bh_pass, (k_rank <= kstar) AS rejected,
   p_adj_micros
 FROM fin ORDER BY k_rank"""
-  }
 }

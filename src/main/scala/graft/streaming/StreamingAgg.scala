@@ -87,8 +87,10 @@ object StreamingAgg {
     override def outputEncoder = org.apache.spark.sql.Encoders.scalaLong
   }
 
-  def registerExactDistinct(spark: SparkSession): Unit =
-    spark.udf.register("exact_distinct_long", udaf(new ExactDistinctLong))
+  /** [[ExactDistinctLong]] as a function of a Column: applied through the
+    * Column API, it needs no entry in a session's function registry.
+    */
+  private val exactDistinctLong = udaf(new ExactDistinctLong)
 
   /** Exactly-once event stream from at-least-once delivery: drop replayed
     * event_ids inside the watermark horizon
@@ -117,10 +119,8 @@ object StreamingAgg {
   def dedupedHourlyAggStream(
       spark: SparkSession,
       events: DataFrame,
-      grace: String = "60 seconds"): DataFrame = {
-    registerExactDistinct(spark)
+      grace: String = "60 seconds"): DataFrame =
     hourlyWindowAgg(dedupEvents(events, s"1 hour $grace"))
-  }
 
   /** Streaming document curation — the ingest-side slice of
     * [[graft.operators.Curation.funnel]] as a stream: the stateless
@@ -295,21 +295,19 @@ object StreamingAgg {
   def slidingCountsStream(
       spark: SparkSession, events: DataFrame,
       len: String = "1 hour", slide: String = "15 minutes",
-      grace: String = "60 seconds"): DataFrame = {
-    registerExactDistinct(spark)
+      grace: String = "60 seconds"): DataFrame =
     events
       .withWatermark("ts", s"$len $grace")
       .groupBy(window(col("ts"), len, slide))
       .agg(
         count(lit(1)).as("n_events"),
-        expr("exact_distinct_long(user_id)").as("n_users"),
+        exactDistinctLong(col("user_id")).as("n_users"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("value_sum"))
       .select(
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("n_events"), col("n_users"), col("value_sum"))
-  }
 
   /** Stream-stream interval join: (error, purchase) pairs within `hours`
     * of each other for the same user — the streaming counterpart of
@@ -346,20 +344,18 @@ object StreamingAgg {
     * [[graft.operators.HourlyAggregation]], over a streaming `events` frame.
     * `grace` mirrors GRACE_PERIOD_SECONDS (default 60 s).
     */
-  def hourlyAggStream(spark: SparkSession, events: DataFrame, grace: String = "60 seconds"): DataFrame = {
-    registerExactDistinct(spark)
+  def hourlyAggStream(spark: SparkSession, events: DataFrame, grace: String = "60 seconds"): DataFrame =
     hourlyWindowAgg(events.withWatermark("ts", s"1 hour $grace"))
-  }
 
   /** The batch aggregate's body ([[HourlyAggregation.byHour]], distinct
-    * users counted by `exact_distinct_long`) over an ALREADY-watermarked
+    * users counted by [[ExactDistinctLong]]) over an ALREADY-watermarked
     * frame —
     * shared by [[hourlyAggStream]] and the chained pipeline
     * [[dedupedHourlyAggStream]] (a streaming query may define its
     * event-time watermark only once, so composition must not re-stamp it).
     */
   private def hourlyWindowAgg(events: DataFrame): DataFrame =
-    HourlyAggregation.byHour(events, expr("exact_distinct_long(user_id)"))
+    HourlyAggregation.byHour(events, exactDistinctLong(col("user_id")))
 
   /** Grouping key for the wall-clock window store: epoch-micros hour
     * floor + event type — the reference's `(window_start, event_type)`

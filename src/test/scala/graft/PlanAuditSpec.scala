@@ -781,14 +781,29 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!plan.toString.contains("CartesianProduct"), plan.toString)
   }
 
-  test("bh_fdr: one wide partial-aggregated pass, no per-replicate scans") {
+  test("bh_fdr: replicate rows from one scan, hash-aggregated, no per-replicate scans") {
     val plan = finalPlan(
       graft.operators.MultipleTesting.bhFdr(Tables.events(spark, sf)))
-    // 2B+4 replicate counters must ride ONE map-side-combined aggregate:
-    // exactly one scan leaf over events, and a partial HashAggregate
+    // the B replicate rows per unit come from one posexplode of the
+    // seeds, not from B scans: exactly one scan leaf over events, and the
+    // (stratum, replicate) sums in a HashAggregate
     val scans = deepLeaves(plan).map(_.toString).count(_.contains("events"))
     assert(scans == 1, s"replicates must share one scan, saw $scans:\n$plan")
     assert(plan.toString.contains("HashAggregate"), plan.toString)
+    assert(!plan.toString.contains("CartesianProduct"), plan.toString)
+  }
+
+  test("perm_test_ab: replicate rows from one scan, hash-aggregated, no join") {
+    val plan = finalPlan(
+      graft.operators.Randomization.permTestAb(Tables.events(spark, sf)))
+    // every (replicate) row carries its observed sums, so the exceed
+    // compare needs no join back to an observed-statistics frame
+    val scans = deepLeaves(plan).map(_.toString).count(_.contains("events"))
+    assert(scans == 1, s"replicates must share one scan, saw $scans:\n$plan")
+    assert(plan.toString.contains("HashAggregate"), plan.toString)
+    // (the tree string covers every query stage: BroadcastHashJoin,
+    // SortMergeJoin, ShuffledHashJoin, BroadcastNestedLoopJoin)
+    assert(!plan.toString.contains("Join"), plan.toString)
     assert(!plan.toString.contains("CartesianProduct"), plan.toString)
   }
 

@@ -821,4 +821,19 @@ class StreamingAggSpec extends SparkTestBase {
         "stream rows must equal the batch operator's (count, checksum) per doc")
     } finally q.stop()
   }
+
+  test("stream builds register no function: two builds of each stream, no warning") {
+    implicit val sqlCtx = spark.sqlContext
+    val (schemas, warns) = WarnCapture {
+      (1 to 2).flatMap { _ =>
+        val src = MemoryStream[Ev].toDF()
+        Seq(StreamingAgg.hourlyAggStream(spark, src),
+          StreamingAgg.dedupedHourlyAggStream(spark, src),
+          StreamingAgg.slidingCountsStream(spark, src)).map(_.schema)
+      }
+    }
+    assert(schemas.take(3) == schemas.drop(3))
+    val hits = warns.filter(_.contains("replaced a previously registered function"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -796,7 +796,7 @@ class PlanAuditSpec extends SparkTestBase {
   test("perm_test_ab: replicate rows from one scan, hash-aggregated, no join") {
     val plan = finalPlan(
       graft.operators.Randomization.permTestAb(Tables.events(spark, sf)))
-    // every (replicate) row carries its observed sums, so the exceed
+    // every replicate row carries its observed sums, so the exceed
     // compare needs no join back to an observed-statistics frame
     val scans = deepLeaves(plan).map(_.toString).count(_.contains("events"))
     assert(scans == 1, s"replicates must share one scan, saw $scans:\n$plan")

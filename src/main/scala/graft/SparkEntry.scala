@@ -58,11 +58,18 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] = staticOracles ++ AnnOracles.pinned
 
-  /** Oracle map with the ANN pins resolved for the given data directory —
-    * immune to other ANN fits having run in the same JVM.
+  /** Oracle map for the queries in `names`, with the ANN pins resolved
+    * for the given data directory — immune to other ANN fits having run in
+    * the same JVM. The pins read the directory's embeddings, so they are
+    * resolved only when `names` holds an ANN query.
     */
-  def oracleSqlFor(spark: SparkSession, sfDir: String): Map[String, String] =
-    staticOracles ++ AnnOracles.pinnedFor(spark, sfDir)
+  def oracleSqlFor(spark: SparkSession, sfDir: String,
+      names: Set[String] = registry.keySet): Map[String, String] = {
+    val pins =
+      if (AnnOracles.names.exists(names)) AnnOracles.pinnedFor(spark, sfDir)
+      else Map.empty[String, String]
+    (staticOracles ++ pins).filter { case (k, _) => names(k) }
+  }
 
   /** A registry query checked against static DuckDB SQL. */
   private def spec(name: String, build: Harness.Query, oracle: => String): QuerySpec =

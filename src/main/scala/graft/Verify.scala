@@ -27,9 +27,7 @@ object Verify {
     } + "\""
     // oracleSqlFor: the ANN pins are selected for THIS sfDir's tables, not
     // whatever ANN fit happened to run last in the JVM.
-    val names = queries.map(_._1).toSet
-    val json = SparkEntry.oracleSqlFor(spark, sfDir)
-      .filter { case (k, _) => names(k) }
+    val json = SparkEntry.oracleSqlFor(spark, sfDir, queries.map(_._1).toSet)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -36,7 +36,8 @@ object HourlyAggregation {
   /** The grouping, measures and projection of [[apply]], with the
     * distinct-user aggregate as the one part that varies: batch counts
     * with `countDistinct`, the streaming form
-    * ([[graft.streaming.StreamingAgg]]) with its exact-distinct UDAF.
+    * ([[graft.streaming.StreamingAgg]]), where the planner rejects
+    * `countDistinct`, with `size(collect_set(user_id))`. Both skip nulls.
     */
   private[graft] def byHour(events: DataFrame, uniqueUsers: Column): DataFrame =
     events

@@ -184,8 +184,8 @@ SELECT o.n AS n_users,
   CAST(o.n - o.na AS BIGINT) AS n_b,
   CAST(${absTSql("o.na", "o.sa")} AS BIGINT) AS abs_t_obs_num,
   CAST($B AS BIGINT) AS replicates,
-  CAST((SELECT sum(ex) FROM cmp) AS BIGINT) AS exceed_cnt,
-  CAST((SELECT sum(ex) FROM cmp) + 1 AS BIGINT) AS p_num,
+  CAST(coalesce((SELECT sum(ex) FROM cmp), 0) AS BIGINT) AS exceed_cnt,
+  CAST(coalesce((SELECT sum(ex) FROM cmp), 0) + 1 AS BIGINT) AS p_num,
   CAST(${B + 1} AS BIGINT) AS p_den
 FROM obs o"""
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -49,14 +49,23 @@ object Sources {
     */
   val wireTimestampFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
+  /** S3's "missing key -> error" over a parsed struct column `e`: the
+    * record is corrupt when the struct is null, its first field is null,
+    * or any field `schema` declares non-nullable is null. Permissive
+    * parsers yield a struct of all-null fields (not a null struct) on a
+    * malformed payload, and a null field on a missing or unparsable key.
+    */
+  private def corruptRecord(schema: StructType): Column =
+    (schema.head +: schema.filterNot(_.nullable)).distinct
+      .map(f => col("e").getField(f.name).isNull)
+      .foldLeft(col("e").isNull)(_ || _)
+
   /** S2+S3 — JSON deserialize with permissive bad-record handling: corrupt
-    * payloads parse to null, are counted via an observable metric (the
+    * payloads ([[corruptRecord]]) are counted via an observable metric (the
     * reference's error counter, kafka_consumer.py:85-107), and dropped.
     */
   def parseJsonEvents(raw: DataFrame, schema: StructType = harnessEventSchema): DataFrame = {
-    // PERMISSIVE from_json yields a struct of all-null fields (not a null
-    // struct) on corrupt input — detect via a required field.
-    val corrupt = col("e").isNull || col(s"e.${schema.head.name}").isNull
+    val corrupt = corruptRecord(schema)
     raw
       .select(from_json(col("value").cast("string"), schema).as("e"))
       .observe("json_parse", count(when(corrupt, 1)).as("corrupt_records"))
@@ -65,13 +74,13 @@ object Sources {
   }
 
   /** S2/S3 CSV variant — `from_csv` deserialize with the same permissive
-    * bad-record contract as [[parseJsonEvents]]: malformed lines parse to
-    * a null required field, are counted via observe(), and dropped. CSV
+    * bad-record contract as [[parseJsonEvents]]: malformed lines
+    * ([[corruptRecord]]) are counted via observe(), and dropped. CSV
     * is the other wire format a batch ingest edge actually sees; the
     * parse is a codegen'd expression, no RDD hop.
     */
   def parseCsvEvents(raw: DataFrame, schema: StructType): DataFrame = {
-    val corrupt = col("e").isNull || col(s"e.${schema.head.name}").isNull
+    val corrupt = corruptRecord(schema)
     raw
       .select(from_csv(col("value").cast("string"), schema,
         Map("mode" -> "PERMISSIVE")).as("e"))

@@ -2,8 +2,7 @@ package graft.streaming
 
 import graft.operators.HourlyAggregation
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming parity for the reference's write path (SURVEY.md
@@ -19,78 +18,23 @@ import org.apache.spark.sql.functions._
   *     (window_start, event_type) keys in the served table — at-least-once
   *     replay is safe.
   *   - O4/O5 exact distinct: streaming aggregation can't plan
-  *     `countDistinct`, so [[ExactDistinctLong]] (a typed Aggregator UDAF)
-  *     accumulates the exact set single-pass, matching the reference's
-  *     materialized `set` semantics (aggregation.py:16-17). At reference
+  *     `countDistinct`, so every stream counts `size(collect_set(...))`
+  *     ([[exactDistinct]]): the exact value set, single-pass, matching the
+  *     reference's materialized `set` semantics (aggregation.py:16-17),
+  *     nulls skipped as `countDistinct` skips them. At reference
   *     cardinalities (user pool <= 1000/window) the state is tiny; for
   *     unbounded domains swap in approx_count_distinct.
   */
 object StreamingAgg {
 
-  /** State buffer for [[ExactDistinctLong]]: a growable primitive Long
-    * array that compacts (sort + dedup in place) whenever it fills. The
-    * worst-case layout in the state store is a flat 8-bytes-per-distinct
-    * array (plus at most one uncompacted duplicate run bounded by the
-    * current capacity) — versus ~40+ bytes/element and object graphs for a
-    * Kryo'd `mutable.HashSet`. Under heavy duplication the compaction keeps
-    * the array near the DISTINCT cardinality, not the observed row count;
-    * the capacity only doubles when a compaction fails to reclaim half the
-    * slots, i.e. when the distinct set itself grew.
+  /** Exact COUNT(DISTINCT `c`) in a streaming aggregation, where the
+    * planner rejects `countDistinct`: the size of the column's value set.
+    * `collect_set` skips nulls as `countDistinct` does, and its state is a
+    * plain array of the distinct values — the reference's materialized
+    * set (aggregation.py:16-17).
     */
-  case class DistinctBuf(var data: Array[Long], var n: Int) {
-    def add(v: Long): DistinctBuf = {
-      if (n == data.length) compactOrGrow()
-      data(n) = v; n += 1; this
-    }
-    private def compactOrGrow(): Unit = {
-      val d = distinctSorted
-      if (d.length <= data.length / 2) {
-        System.arraycopy(d, 0, data, 0, d.length)
-      } else {
-        val nd = new Array[Long](math.max(8, data.length * 2))
-        System.arraycopy(d, 0, nd, 0, d.length)
-        data = nd
-      }
-      n = d.length
-    }
-    def distinctSorted: Array[Long] = {
-      val s = java.util.Arrays.copyOf(data, n)
-      java.util.Arrays.sort(s)
-      var w = 0; var i = 0
-      while (i < n) {
-        if (w == 0 || s(w - 1) != s(i)) { s(w) = s(i); w += 1 }
-        i += 1
-      }
-      java.util.Arrays.copyOf(s, w)
-    }
-  }
-
-  /** Exact COUNT(DISTINCT <long col>) as a single-pass typed Aggregator —
-    * usable in streaming aggregations where Spark's planner rejects
-    * countDistinct. Exact-set semantics match the reference's materialized
-    * sets; the [[DistinctBuf]] state encodes as a primitive long array
-    * (product encoder — no Kryo object graph in the state store). For
-    * genuinely unbounded key domains swap in approx_count_distinct
-    * (hourly_agg_approx is that variant).
-    */
-  class ExactDistinctLong extends Aggregator[Long, DistinctBuf, Long] {
-    override def zero: DistinctBuf = DistinctBuf(new Array[Long](8), 0)
-    override def reduce(b: DistinctBuf, a: Long): DistinctBuf = b.add(a)
-    override def merge(b1: DistinctBuf, b2: DistinctBuf): DistinctBuf = {
-      val d = b2.distinctSorted
-      var i = 0
-      while (i < d.length) { b1.add(d(i)); i += 1 }
-      b1
-    }
-    override def finish(r: DistinctBuf): Long = r.distinctSorted.length.toLong
-    override def bufferEncoder = org.apache.spark.sql.Encoders.product[DistinctBuf]
-    override def outputEncoder = org.apache.spark.sql.Encoders.scalaLong
-  }
-
-  /** [[ExactDistinctLong]] as a function of a Column: applied through the
-    * Column API, it needs no entry in a session's function registry.
-    */
-  private val exactDistinctLong = udaf(new ExactDistinctLong)
+  private def exactDistinct(c: String): Column =
+    size(collect_set(col(c))).cast("long")
 
   /** Exactly-once event stream from at-least-once delivery: drop replayed
     * event_ids inside the watermark horizon
@@ -262,8 +206,8 @@ object StreamingAgg {
     * is one open session range per active (user, session), evicted on
     * emission — bounded by concurrently-active sessions, not history.
     * The aggregate list mirrors the batch operator except exact distinct
-    * (streaming forbids countDistinct; `size(collect_set(...))` has the
-    * same exact-set semantics with state bounded by the enumerable type
+    * (streaming forbids countDistinct; [[exactDistinct]] has the same
+    * exact-set semantics with state bounded by the enumerable type
     * domain), so batch and stream move together — the parity
     * StreamingAggSpec asserts row-for-row.
     */
@@ -275,7 +219,7 @@ object StreamingAgg {
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(
         count(lit(1)).as("n_events"),
-        size(collect_set(col("event_type"))).cast("long").as("n_types"),
+        exactDistinct("event_type").as("n_types"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("value_sum"))
       .select(
@@ -301,7 +245,7 @@ object StreamingAgg {
       .groupBy(window(col("ts"), len, slide))
       .agg(
         count(lit(1)).as("n_events"),
-        exactDistinctLong(col("user_id")).as("n_users"),
+        exactDistinct("user_id").as("n_users"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
           .cast("double").as("value_sum"))
       .select(
@@ -348,14 +292,13 @@ object StreamingAgg {
     hourlyWindowAgg(events.withWatermark("ts", s"1 hour $grace"))
 
   /** The batch aggregate's body ([[HourlyAggregation.byHour]], distinct
-    * users counted by [[ExactDistinctLong]]) over an ALREADY-watermarked
-    * frame —
-    * shared by [[hourlyAggStream]] and the chained pipeline
+    * users counted by [[exactDistinct]]) over an ALREADY-watermarked
+    * frame — shared by [[hourlyAggStream]] and the chained pipeline
     * [[dedupedHourlyAggStream]] (a streaming query may define its
     * event-time watermark only once, so composition must not re-stamp it).
     */
   private def hourlyWindowAgg(events: DataFrame): DataFrame =
-    HourlyAggregation.byHour(events, exactDistinctLong(col("user_id")))
+    HourlyAggregation.byHour(events, exactDistinct("user_id"))
 
   /** Grouping key for the wall-clock window store: epoch-micros hour
     * floor + event type — the reference's `(window_start, event_type)`
@@ -365,10 +308,11 @@ object StreamingAgg {
 
   /** Per-window state: counts + the exact user set as a sorted-distinct
     * long array (the reference keeps literal Python sets in memory,
-    * aggregation.py:16-17 — same cardinality bound applies).
+    * aggregation.py:16-17 — same cardinality bound applies). `totalValue`
+    * sums the non-null values and `valueCount` counts them (O6/O7).
     */
   case class GraceState(
-      eventCount: Long, users: Array[Long], totalValue: Double)
+      eventCount: Long, users: Array[Long], totalValue: Double, valueCount: Long)
 
   /** One flushed window — the reference's AggregationRecord shape
     * restricted to the harness measure set.
@@ -376,7 +320,7 @@ object StreamingAgg {
   case class GraceFlushRec(
       window_start: java.sql.Timestamp, window_end: java.sql.Timestamp,
       event_type: String, event_count: Long, unique_user_count: Long,
-      total_value: Double, avg_value: Double)
+      total_value: Double, avg_value: Option[Double])
 
   /** O9 FAITHFUL variant — processing-time grace, exactly the
     * reference's wall-clock reap (`get_completed_windows(now, grace)`
@@ -420,7 +364,7 @@ object StreamingAgg {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val typed = events
       .select(col("ts"), col("event_type"), col("user_id"), col("value"))
-      .as[(java.sql.Timestamp, String, Long, Double)]
+      .as[(java.sql.Timestamp, String, Option[Long], Option[Double])]
     typed
       .groupByKey { case (ts, et, _, _) =>
         val micros = ts.getTime * 1000L // ms -> micros
@@ -440,21 +384,26 @@ object StreamingAgg {
               new java.sql.Timestamp(key.windowStartMicros / 1000L),
               new java.sql.Timestamp(windowEndMs),
               key.eventType, s.eventCount, s.users.length.toLong,
-              total, total / s.eventCount))
+              total, Option.when(s.valueCount > 0)(total / s.valueCount)))
           } else {
             // fresh state when absent — INCLUDING after a reap (the
             // late-reopen path: counts restart from zero)
             var count = 0L
             var total = 0.0
+            var valued = 0L
             val users = scala.collection.mutable.SortedSet.empty[Long]
             if (state.exists) {
               val s = state.get
-              count = s.eventCount; total = s.totalValue; users ++= s.users
+              count = s.eventCount; total = s.totalValue; valued = s.valueCount
+              users ++= s.users
             }
+            // null user and null value are skipped, as countDistinct, sum
+            // and count skip them in the batch aggregate
             rows.foreach { case (_, _, uid, v) =>
-              count += 1; total += v; users += uid
+              count += 1; users ++= uid
+              v.foreach { x => total += x; valued += 1 }
             }
-            state.update(GraceState(count, users.toArray, total))
+            state.update(GraceState(count, users.toArray, total, valued))
             // reap at the first batch after window_end + grace passes
             // the wall clock (already-expired windows fire next batch)
             state.setTimeoutDuration(

@@ -130,29 +130,6 @@ class ExpressionEdgeSpec extends SparkTestBase {
     }
   }
 
-  test("DistinctBuf matches a reference HashSet over random workloads") {
-    val agg = new graft.streaming.StreamingAgg.ExactDistinctLong
-    for (seed <- 1 to 5) {
-      val rng = new scala.util.Random(seed)
-      var buf = agg.zero
-      val ref = scala.collection.mutable.HashSet.empty[Long]
-      // mixed duplication regimes, including merges mid-stream
-      (0 until 20000).foreach { i =>
-        val v = rng.nextInt(1 << (seed + 4)).toLong
-        buf = agg.reduce(buf, v); ref += v
-        if (i % 5000 == 4999) {
-          var other = agg.zero
-          (0 until 100).foreach { _ =>
-            val w = rng.nextInt(100000).toLong
-            other = agg.reduce(other, w); ref += w
-          }
-          buf = agg.merge(buf, other)
-        }
-      }
-      assert(agg.finish(buf) == ref.size.toLong, s"seed $seed")
-    }
-  }
-
   test("native SQL functions reject a wrong arity or a non-literal size at analysis") {
     val docs = Seq(("a b c d e", 1L)).toDF("text", "doc_id")
       .withColumn("v", expr("array(1.0D, 2.0D)"))

@@ -37,6 +37,24 @@ class QuerySurfaceSpec extends SparkTestBase {
     assert(e.getMessage.contains("duplicate query names: hourly_agg"), e.getMessage)
   }
 
+  test("a subset's oracle map reads the embeddings only when it names an ANN query") {
+    // a directory with events.parquet alone serves perm_test_ab, so its
+    // oracle map must not resolve the ANN pins (which read embeddings)
+    val dir = java.nio.file.Files.createTempDirectory("graft_events_only")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "events.parquet"),
+      dir.resolve("events.parquet"))
+    try {
+      val m = SparkEntry.oracleSqlFor(spark, dir.toString, Set("perm_test_ab"))
+      assert(m.keySet == Set("perm_test_ab"))
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        SparkEntry.oracleSqlFor(spark, dir.toString, Set("perm_test_ab", "ann_ivf")))
+      assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+    } finally {
+      java.nio.file.Files.delete(dir.resolve("events.parquet"))
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("the queries without a static oracle are exactly the ANN pins") {
     val pinnedOnly = SparkEntry.specs.filter(_.oracle.isEmpty).map(_.name)
     assert(pinnedOnly.sorted == AnnOracles.names.sorted)

@@ -63,7 +63,9 @@ class SourcesObsSpec extends SparkTestBase {
       val raw = Seq(
         """{"event_id": 1, "ts": "2024-01-01T10:00:00", "user_id": 7, "event_type": "click", "value": 1.5, "props": "{}"}""",
         """not json at all""",
-        """{"event_id": 2, "ts": "2024-01-01T11:00:00", "user_id": 8, "event_type": "view", "value": null, "props": null}"""
+        """{"event_id": 2, "ts": "2024-01-01T11:00:00", "user_id": 8, "event_type": "view", "value": null, "props": null}""",
+        // a required key missing (S3 "missing key -> error"): corrupt too
+        """{"event_id": 3, "ts": "2024-01-01T12:00:00", "event_type": "view", "value": 2.0, "props": null}"""
       ).toDF("value")
       val parsed = Sources.parseJsonEvents(raw)
       val rows = parsed.collect()
@@ -72,7 +74,7 @@ class SourcesObsSpec extends SparkTestBase {
       // observe() metric captured by the listener
       val m = awaitMetric(listener, "json_parse")
       assert(m.isDefined, s"metrics: ${listener.collected}")
-      assert(m.get._2("corrupt_records") == 1L)
+      assert(m.get._2("corrupt_records") == 2L)
     } finally spark.listenerManager.unregister(listener)
   }
 

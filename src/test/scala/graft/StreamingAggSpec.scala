@@ -8,6 +8,9 @@ import java.sql.Timestamp
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
 case class Doc(doc_id: Long, ingest_ts: Timestamp, text: String, source: String)
+/** An event whose user and value may be missing. */
+case class EvN(event_id: Long, ts: Timestamp, user_id: Option[Long], event_type: String,
+    value: Option[Double])
 
 class StreamingAggSpec extends SparkTestBase {
   import spark.implicits._
@@ -15,15 +18,20 @@ class StreamingAggSpec extends SparkTestBase {
   private def ev(id: Long, t: String, u: Long, typ: String, v: Double) =
     Ev(id, Timestamp.valueOf(t), u, typ, v)
 
+  private def evn(id: Long, t: String, u: Option[Long], typ: String, v: Option[Double]) =
+    EvN(id, Timestamp.valueOf(t), u, typ, v)
+
   test("streaming hourly agg (complete mode) matches batch aggregation") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
+    val mem = MemoryStream[EvN]
     val events = Seq(
-      ev(1, "2024-01-01 10:05:00", 1, "click", 2.0),
-      ev(2, "2024-01-01 10:15:00", 2, "click", 3.5),
-      ev(3, "2024-01-01 10:55:00", 1, "view", 1.25),
-      ev(4, "2024-01-01 11:05:00", 3, "click", 4.0),
-      ev(5, "2024-01-01 11:20:00", 1, "click", 0.75))
+      evn(1, "2024-01-01 10:05:00", Some(1), "click", Some(2.0)),
+      evn(2, "2024-01-01 10:15:00", Some(2), "click", Some(3.5)),
+      evn(3, "2024-01-01 10:55:00", Some(1), "view", Some(1.25)),
+      evn(4, "2024-01-01 11:05:00", Some(3), "click", Some(4.0)),
+      evn(5, "2024-01-01 11:20:00", Some(1), "click", Some(0.75)),
+      // no user: countDistinct skips it, so the stream must too (2 users)
+      evn(6, "2024-01-01 10:30:00", None, "click", Some(1.0)))
     mem.addData(events: _*)
 
     val agg = StreamingAgg.hourlyAggStream(spark, mem.toDF())
@@ -75,7 +83,7 @@ class StreamingAggSpec extends SparkTestBase {
 
   test("processing-time grace: wall-clock reap, late reopen, LWW overwrite (reference parity)") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
+    val mem = MemoryStream[EvN]
     val dir = java.nio.file.Files.createTempDirectory("graft_grace").toString + "/agg"
     // events live in a long-past hour, so vs the WALL clock the window is
     // already beyond end+grace — the reap is due at the next micro-batch
@@ -93,22 +101,29 @@ class StreamingAggSpec extends SparkTestBase {
     // quiescence and processAllAvailable blocks forever. The same spin
     // also ingests newly-added MemoryStream data, so polling the sink
     // is both necessary and sufficient.
-    def table() =
-      try spark.read.parquet(dir).filter(col("event_type") === "click").collect()
+    def table(eventType: String) =
+      try spark.read.parquet(dir).filter(col("event_type") === eventType).collect()
       catch { case _: Throwable => Array.empty[org.apache.spark.sql.Row] }
-    def awaitClick(pred: Array[org.apache.spark.sql.Row] => Boolean): Array[org.apache.spark.sql.Row] = {
+    def await(eventType: String)(
+        pred: Array[org.apache.spark.sql.Row] => Boolean): Array[org.apache.spark.sql.Row] = {
       val deadline = System.nanoTime() + 60e9.toLong
-      var rows = table()
+      var rows = table(eventType)
       while (!pred(rows) && System.nanoTime() < deadline) {
-        Thread.sleep(200); rows = table()
+        Thread.sleep(200); rows = table(eventType)
       }
       rows
     }
+    val awaitClick = await("click") _
     try {
       val full = Seq(
-        ev(1, "2024-01-01 10:05:00", 1, "click", 2.0),
-        ev(2, "2024-01-01 10:15:00", 2, "click", 3.0),
-        ev(3, "2024-01-01 10:40:00", 1, "click", 1.0))
+        evn(1, "2024-01-01 10:05:00", Some(1), "click", Some(2.0)),
+        evn(2, "2024-01-01 10:15:00", Some(2), "click", Some(3.0)),
+        evn(3, "2024-01-01 10:40:00", Some(1), "click", Some(1.0)),
+        // missing values and users are skipped, as the batch aggregate
+        // skips them: views average their one value, errors have none
+        evn(5, "2024-01-01 10:20:00", Some(3), "view", None),
+        evn(6, "2024-01-01 10:25:00", None, "view", Some(4.0)),
+        evn(7, "2024-01-01 10:30:00", Some(3), "error", None))
       mem.addData(full: _*)
       // reap fires on a later batch once wall clock passes the due time
       val first = awaitClick(_.nonEmpty)
@@ -116,10 +131,20 @@ class StreamingAggSpec extends SparkTestBase {
       assert(first.head.getAs[Long]("event_count") == 3L)
       assert(first.head.getAs[Long]("unique_user_count") == 2L)
       assert(first.head.getAs[Double]("total_value") == 6.0)
+      val batchFull = HourlyAggregation(full.toDF())
+      for (t <- Seq("view", "error")) {
+        val got = await(t)(_.nonEmpty)
+        assert(got.length == 1, s"$t: ${got.mkString(";")}")
+        val want = batchFull.filter(col("event_type") === t).head()
+        for (c <- Seq("event_count", "unique_user_count", "avg_value"))
+          assert(got.head.getAs[Any](c) == want.getAs[Any](c), s"$t $c: ${got.head} vs $want")
+      }
+      // the reference's total starts at 0 and adds only present values
+      assert(table("error").head.getAs[Double]("total_value") == 0.0)
 
       // LATE event for the reaped window: the reference re-opens a FRESH
       // window (aggregation.py:53-58 — no memory of flushed counts) ...
-      val late = ev(4, "2024-01-01 10:50:00", 7, "click", 9.0)
+      val late = evn(4, "2024-01-01 10:50:00", Some(7), "click", Some(9.0))
       mem.addData(late)
       // ... and its eventual flush OVERWRITES the stored row via the
       // ON CONFLICT DO UPDATE upsert (upsert_aggregation.sql:13-19)
@@ -503,29 +528,12 @@ class StreamingAggSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("DistinctBuf state stays near distinct cardinality under heavy duplication") {
-    // 100k observed rows over a 100-value domain: compaction must keep the
-    // buffer capacity bounded by the DISTINCT set, not the row count.
-    val agg = new StreamingAgg.ExactDistinctLong
-    var buf = agg.zero
-    val rng = new scala.util.Random(7)
-    (0 until 100000).foreach(_ => buf = agg.reduce(buf, rng.nextInt(100).toLong))
-    assert(agg.finish(buf) == 100L)
-    assert(buf.data.length <= 512,
-      s"state capacity ${buf.data.length} should be bounded by distinct cardinality, not 100k rows")
-    // merge path preserves exactness and the bound
-    var b2 = agg.zero
-    (1000 until 1100).foreach(v => b2 = agg.reduce(b2, v.toLong))
-    val m = agg.merge(buf, b2)
-    assert(agg.finish(m) == 200L)
-  }
-
   test("RocksDB state store backend: same aggregates as the default provider") {
     // The 100 TB streaming-state path: HDFSBackedStateStore holds every
     // (window, type) entry on the JVM heap; RocksDB keeps state off-heap
     // and spills to local disk, which is what makes billions of keys per
     // executor viable. Run the SAME windowed aggregation (including the
-    // ExactDistinctLong UDAF whose buffer must round-trip RocksDB's
+    // exact-distinct `collect_set` buffer, which must round-trip RocksDB's
     // serialization) on both providers and require identical output.
     implicit val sqlCtx = spark.sqlContext
     val events = Seq(
